@@ -14,14 +14,11 @@ from __future__ import annotations
 import json
 import sys
 
-import pyspark.sql.functions as F
-
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from goconnect_spark.functions import avro_py  # noqa: E402
-from goconnect_spark.functions.serde import InMemorySchemaRegistry  # noqa: E402
+from goconnect_spark.functions.serde import InMemorySchemaRegistry, sr_prepend_header  # noqa: E402
 from goconnect_spark.pipeline import Pipeline  # noqa: E402
-from goconnect_spark.plans.coders import sr_wire_header  # noqa: E402
 from goconnect_spark.session import get_spark  # noqa: E402
 from goconnect_spark.sources import ListSource  # noqa: E402
 from goconnect_spark.sources.sinks import KafkaSink  # noqa: E402
@@ -57,7 +54,7 @@ def main():
     p = (
         Pipeline(spark)
         .root(ListSource(records))
-        .map(lambda v: F.concat(sr_wire_header(sid), v))
+        .map(lambda v: sr_prepend_header(v, sid))
     )
     out = p.ordered_dataframe()
     prepared = KafkaSink("broker:9092", "example")._prepare(out)

@@ -9,8 +9,8 @@ reference at /root/reference) on idiomatic Spark primitives:
   compiles to a single DataFrame / Structured Streaming query;
 - the ack/commit/watermark runtime (reference context.go:462-642) is
   *replaced* by Spark checkpointing, not ported;
-- coder injection (reference pipeline.go:168-197) becomes schema-driven
-  column conversions (`plans.ensure_schema`);
+- coder injection (reference pipeline.go:168-197) becomes a BFS over
+  typed column conversions (`plans.coders.CoderRegistry`);
 - the TCP scatter/gather network layer (reference network/) becomes
   shuffle: `repartition` / ordered merge.
 

@@ -1,3 +1,3 @@
-from goconnect_spark.functions import serde, text, vector
+from goconnect_spark.functions import serde
 
-__all__ = ["text", "vector", "serde"]
+__all__ = ["serde"]

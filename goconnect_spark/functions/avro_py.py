@@ -8,8 +8,8 @@ user.go:1-40). spark-avro's from_avro would be the JVM fast path, but
 the jar is not on this container's classpath — this module implements
 the same semantics in Python so the whole SR chain
 (wire header -> avro body -> struct column) runs and is tested
-in-container. `functions.serde.decode_avro` remains the jar-gated
-fast path; `avro_decode_udf` here is the portable one.
+without the jar. It is the engine's only Avro codec;
+`avro_decode_udf` is its Arrow-batched column form.
 
 Supported (the reference fixtures' full surface): null boolean int
 long float double bytes string record enum array map fixed, unions,

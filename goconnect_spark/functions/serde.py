@@ -4,9 +4,10 @@ package (reference coder/serde/, coder/xml/).
 
 The Confluent wire format (reference coder/serde/decoder.go:30-83):
 byte 0 = 0x00 magic, bytes 1-4 = big-endian schema id, rest = Avro
-binary. Header strip/prepend are pure column expressions; the Avro
-body decode uses spark-avro's from_avro when the jar is on the
-classpath (gated — see `avro_available`).
+binary. This module is the one place that layout is coded: header
+strip/prepend are pure column expressions, and the coder registry's
+sr-avro strip edge calls `sr_strip_header`. The Avro body codec is
+`functions.avro_py` (pure Python, Arrow-batched).
 
 A minimal SR REST client (`SchemaRegistryClient`) covers the
 reference's fetch-schema-by-id / register-schema flows with a local
@@ -17,7 +18,6 @@ tests stub it.
 from __future__ import annotations
 
 import json
-from typing import Optional
 from urllib import request as _urlreq
 
 import pyspark.sql.functions as F
@@ -35,43 +35,14 @@ def sr_schema_id(value: Column) -> Column:
     return (conv[0] * 16777216 + conv[1] * 65536 + conv[2] * 256 + conv[3]).cast("int")
 
 
+def _sr_header(schema_id: int) -> bytes:
+    """Confluent wire-format header: 0x00 magic + 4-byte BE schema id."""
+    return bytes([0]) + int(schema_id).to_bytes(4, "big")
+
+
 def sr_prepend_header(avro_body: Column, schema_id: int) -> Column:
     """Raw Avro body -> Confluent payload (reference encoder.go:50-96)."""
-    header = bytes([0]) + int(schema_id).to_bytes(4, "big")
-    return F.concat(F.lit(bytearray(header)), avro_body)
-
-
-def avro_available(spark) -> bool:
-    """True when the spark-avro jar is on the classpath."""
-    try:
-        from pyspark.sql.avro.functions import from_avro
-
-        df = spark.range(1).select(F.lit(bytearray(b"\x00")).alias("b"))
-        df.select(from_avro("b", '{"type":"long"}')).schema
-        return True
-    except Exception:
-        return False
-
-
-def decode_avro(body: Column, writer_schema: str, reader_schema: Optional[str] = None) -> Column:
-    """Avro body -> struct column. Reader-schema projection covers the
-    reference's GenericProjector (schema evolution with aliases and
-    defaults, reference coder/serde/projector.go:8-32)."""
-    from pyspark.sql.avro.functions import from_avro
-
-    options = {"mode": "PERMISSIVE"}
-    if reader_schema is not None:
-        # writer schema decodes the bytes; the reader schema is what
-        # the column is projected into
-        options["actualSchema"] = writer_schema
-        return from_avro(body, reader_schema, options)
-    return from_avro(body, writer_schema, options)
-
-
-def encode_avro(struct: Column, schema: str) -> Column:
-    from pyspark.sql.avro.functions import to_avro
-
-    return to_avro(struct, schema)
+    return F.concat(F.lit(bytearray(_sr_header(schema_id))), avro_body)
 
 
 def xml_decode(xml: Column, schema: str) -> Column:
@@ -200,7 +171,7 @@ def sr_reencode_udf(writer_schemas: dict, target_schema: str, target_id: int):
 
     writers = {int(i): avro_py.parse_schema(s) for i, s in writer_schemas.items()}
     target = avro_py.parse_schema(target_schema)
-    header = bytes([0]) + int(target_id).to_bytes(4, "big")
+    header = _sr_header(target_id)
 
     def reenc(s):
         def one(b):

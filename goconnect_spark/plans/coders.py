@@ -19,9 +19,8 @@ Built-in coders (reference coder/ package parity):
                             deterministic output
   binary <-> kv struct      kv.NilKeyEncoder/IgnoreKeyDecoder (coder/kv/)
   sr-avro binary -> binary  SchemaRegistryDecoder header strip
-                            (coder/serde/decoder.go:30-83): Confluent
-                            wire format = 0x00 + 4-byte BE schema id +
-                            payload
+                            (coder/serde/decoder.go:30-83) via
+                            functions.serde.sr_strip_header
 
 Schema-dependent coders (xml/avro with explicit schemas) are
 constructed explicitly via the functions module and registered
@@ -37,6 +36,8 @@ from typing import Callable, Optional, Union
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
+
+from goconnect_spark.functions import serde
 
 ColumnFn = Callable[[Column], Column]
 
@@ -148,26 +149,6 @@ def default_registry() -> CoderRegistry:
     r.register("binary", "binary", lambda c: _gzip_compress_udf()(c), dst_codec="gzip")
     r.register("binary", "binary", lambda c: _gzip_decompress_udf()(c), src_codec="gzip")
     # Confluent SR wire format strip: sr-avro bytes -> raw avro payload
-    # (magic 0x00 + 4-byte BE schema id + payload; decoder.go:37-43)
-    r.register(
-        "binary",
-        "binary",
-        lambda c: F.substring(c, 6, 2147483647),
-        src_codec="sr-avro",
-    )
+    # (decoder.go:37-43; the layout is coded once, in functions.serde)
+    r.register("binary", "binary", serde.sr_strip_header, src_codec="sr-avro")
     return r
-
-
-def sr_wire_header(schema_id: int) -> Column:
-    """Confluent wire-format header: 0x00 magic + 4-byte BE schema id
-    (reference coder/serde/encoder.go:50-96 registers the schema and
-    prepends this)."""
-    b = bytes([0]) + int(schema_id).to_bytes(4, "big")
-    return F.lit(bytearray(b))
-
-
-def sr_extract_schema_id(value: Column) -> Column:
-    """Schema id from a Confluent wire-format payload: bytes 2-5 BE
-    (reference coder/serde/decoder.go:44-49)."""
-    conv = [F.conv(F.hex(F.substring(value, i, 1)), 16, 10).cast("long") for i in range(2, 6)]
-    return (conv[0] * 16777216 + conv[1] * 65536 + conv[2] * 256 + conv[3]).cast("int")

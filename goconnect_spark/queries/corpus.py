@@ -54,11 +54,16 @@ def cached_table(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFram
     with no hard-coded hints. The count costs nothing in aggregate: the
     first consumer paid full materialization anyway, it just paid it
     after planning instead of before."""
-    # keyed on applicationId, not id(spark) (r15, VERDICT r14 item 7):
-    # a GC'd session's id() can be reused by a NEW session, which
-    # would then be handed a dead DataFrame; applicationId is unique
-    # per context (timestamp-suffixed) so stale entries never collide
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind)
+    # keyed on applicationId, not id(spark): a GC'd session's id() can
+    # be reused by a NEW session, which would then be handed a dead
+    # DataFrame; applicationId is unique per context. A process runs
+    # one SparkContext at a time, so entries of any other application
+    # belong to a stopped context and are dropped here — otherwise
+    # every stop/start cycle would leave its DataFrames behind.
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _CACHE if k[0] != app]:
+        del _CACHE[stale]
+    key = (app, os.path.abspath(sf_dir), kind)
     df = _CACHE.get(key)
     if df is None:
         df = build().persist(StorageLevel.MEMORY_AND_DISK)

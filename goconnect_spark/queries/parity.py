@@ -379,7 +379,7 @@ ORDER BY e
 
 # Avro ENCODER certificate (round 14, VERDICT r13 item 3): the encode
 # path (GenericRecord -> Avro body -> Confluent SR wire framing,
-# functions/avro_py.py _Writer + functions/serde.py:38, reference
+# functions/avro_py.py _Writer + functions/serde.py sr_prepend_header, reference
 # coder/serde/encoder.go:50-96) was loopback-tested only while the
 # decode side carried avro_decode_fold — and the r13 mutation check
 # found exactly the class of bug an uncertified encoder can hide.

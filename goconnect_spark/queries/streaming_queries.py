@@ -326,6 +326,42 @@ ORACLE = {
 }
 
 
+def _int64_rows(col):
+    """(rows, 64) int64 matrix from an Arrow list column of 64-d
+    vectors; any other width raises instead of being reshaped into
+    misaligned rows."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if (lengths != 64).any():
+        raise ValueError(f"expected 64-wide vectors, got lengths {sorted(set(lengths.tolist()))}")
+    return col.flatten().to_numpy(zero_copy_only=False).astype(np.int64).reshape(-1, 64)
+
+
+def _pair_cosines(batches):
+    """mapInArrow body: per (probe, vector) row, the exact int64 dot of
+    the two quantized 64-d vectors over the product of their norms."""
+    import numpy as np
+    import pyarrow as pa
+
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        dot = (_int64_rows(b.column("q16")) * _int64_rows(b.column("pq16"))).sum(axis=1)
+        nrm = b.column("nrm").to_numpy(zero_copy_only=False)
+        pnrm = b.column("pnrm").to_numpy(zero_copy_only=False)
+        cos = dot.astype(np.float64) / (nrm * pnrm)
+        yield pa.RecordBatch.from_arrays(
+            [
+                b.column("probe_id"),
+                pa.array(cos, type=pa.float64()),
+                b.column("vec_id"),
+            ],
+            ["probe_id", "cosine", "vec_id"],
+        )
+
+
 # --------------------------------------------------------------------
 # Stream-STATIC ANN serving — the sixth streaming surface: online
 # vector lookup against a pre-built IVF index. The index side is the
@@ -417,38 +453,6 @@ def _ann_lookup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes16 = probes.withColumn(
         "pq16", F.expr("transform(pqs, x -> cast(x as smallint))")
     ).select("probe_id", "cell", "pnrm", "pq16")
-
-    def _pair_cosines(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            q = (
-                b.column("q16").flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-                .reshape(-1, 64)
-            )
-            p = (
-                b.column("pq16").flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-                .reshape(-1, 64)
-            )
-            dot = (q * p).sum(axis=1)
-            nrm = b.column("nrm").to_numpy(zero_copy_only=False)
-            pnrm = b.column("pnrm").to_numpy(zero_copy_only=False)
-            cos = dot.astype(np.float64) / (nrm * pnrm)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("probe_id"),
-                    pa.array(cos, type=pa.float64()),
-                    b.column("vec_id"),
-                ],
-                ["probe_id", "cosine", "vec_id"],
-            )
 
     joined = (
         probes16.join(idx16, "cell")

@@ -58,81 +58,6 @@ def keyed_fold(
     )
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    server protocol; absent in this container (no installs) — the TWS
-    backend is capability-gated exactly like pika/PIL."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def keyed_fold_tws(
-    stream: DataFrame,
-    key_col: str,
-    value_col: str,
-    init: float,
-    update: Callable[[float, float], float],
-    output_schema: str = "key string, acc double, n bigint",
-) -> DataFrame:
-    """The same UserFoldFn surface on Spark 4's transformWithState
-    API (StatefulProcessor + ValueState): typed per-key state with
-    its own lifecycle (TTL/timers available), the successor of
-    applyInPandasWithState. Kept alongside keyed_fold so both
-    stateful backends stay exercised. Raises NotImplementedError when
-    the protobuf runtime TWS depends on is not installed (see
-    tws_available)."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not installed in this environment; use keyed_fold "
-            "(applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [StructField("acc", DoubleType()), StructField("n", LongType())]
-    )
-
-    class FoldProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("fold", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            acc, n = self._state.get() if self._state.exists() else (init, 0)
-            for pdf in rows:
-                for v in pdf[value_col]:
-                    acc = update(acc, float(v))
-                    n += 1
-            self._state.update((acc, n))
-            yield pd.DataFrame({"key": [str(key[0])], "acc": [acc], "n": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.groupBy(key_col)
-        .transformWithStateInPandas(
-            FoldProcessor(),
-            outputStructType=output_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def budget_admit(
     stream: DataFrame,
     key_col: str,

@@ -93,8 +93,3 @@ def spread(df: DataFrame, key: str | None = None, factor: float = 1.0) -> DataFr
         return df
     return df.repartition(target, key) if key else df.repartition(target)
 
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so ``spark.sql`` works on them."""
-    for name in TABLE_NAMES:
-        load(spark, name, sf_dir).createOrReplaceTempView(name)

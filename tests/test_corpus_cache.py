@@ -75,3 +75,47 @@ def test_cached_table_stats_are_actual_not_estimated(spark, tmp_path):
         f"vs estimate {unmaterialized_estimate}"
     )
     df.unpersist()
+
+
+_STOP_THEN_NEW_SESSION = """
+import sys
+from pyspark.sql import SparkSession
+from goconnect_spark.queries import corpus
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+first = session()
+corpus.cached_table(first, sys.argv[1], "a", lambda: first.range(3))
+corpus.cached_table(first, sys.argv[1], "b", lambda: first.range(4))
+first_app = first.sparkContext.applicationId
+first.stop()
+
+second = session()
+df = corpus.cached_table(second, sys.argv[1], "a", lambda: second.range(5))
+app = second.sparkContext.applicationId
+assert app != first_app
+assert [k[0] for k in corpus._CACHE] == [app], corpus._CACHE
+assert df.count() == 5
+second.stop()
+"""
+
+
+def test_cached_table_drops_stopped_sessions(tmp_path):
+    """Entries of a stopped application are evicted on the next
+    lookup: after stop + new session the registry holds only the new
+    application's tables, and a kind cached before the stop is
+    rebuilt rather than served from the dead context."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [repo] + [p for p in [os.environ.get("PYTHONPATH")] if p]))
+    r = subprocess.run(
+        [sys.executable, "-c", _STOP_THEN_NEW_SESSION, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]

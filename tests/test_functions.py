@@ -1,35 +1,41 @@
-"""Unit tests for the reusable functions layer (text/vector/serde)."""
+"""Unit tests for the functions layer (serde) and the catalog's
+reusable text/vector helpers (corpus, dedup, similarity)."""
 
 import math
 
 import pyspark.sql.functions as F
 import pytest
 
-from goconnect_spark.functions import serde, text, vector
+from goconnect_spark.functions import serde
+from goconnect_spark.queries.corpus import shingle_arrays_for
+from goconnect_spark.queries.dedup import minhash_bands_for, ngram_jaccard_pairs
 
 
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "the quick brown fox jumps over the lazy cat"),
+        # near-duplicates: bigram Jaccard 17/19
+        (0, "the quick brown fox jumps over the lazy dog and then runs far away into the quiet green forest"),
+        (1, "the quick brown fox jumps over the lazy dog and then runs far away into the quiet green field"),
         (2, "completely different content here entirely"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _toks(docs):
+    return docs.select("doc_id", F.split("text", " ").alias("toks"))
+
+
 def test_tokens_and_shingles(docs):
-    t = text.tokens(docs).groupBy("doc_id").count().collect()
-    assert {r.doc_id: r["count"] for r in t} == {0: 9, 1: 9, 2: 5}
-    sh = text.word_shingles(docs, n=2)
-    n0 = sh.where("doc_id = 0").count()
-    assert n0 == 8  # 9 words -> 8 bigrams, all distinct here
+    sh = {r.doc_id: (r.shset, r.n) for r in shingle_arrays_for(_toks(docs)).collect()}
+    shset, n = sh[0]
+    assert n == 18  # 19 words -> 18 bigrams, all distinct here
+    assert shset == sorted(shset) and "quick brown" in shset
+    assert sh[2][1] == 4
 
 
 def test_minhash_similar_docs_share_bands(docs):
-    sh = text.word_shingles(docs, n=2)
-    sig = text.minhash_signature(sh, n_hashes=12)
-    bands = text.lsh_band_keys(sig, band_size=3)
+    bands = minhash_bands_for(shingle_arrays_for(_toks(docs)))
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -44,60 +50,51 @@ def test_minhash_similar_docs_share_bands(docs):
     assert (0, 2) not in pairs and (1, 2) not in pairs
 
 
-def test_jaccard_pairs_exact(spark, docs):
-    sh = text.word_shingles(docs, n=2)
-    cand = spark.createDataFrame([(0, 1), (0, 2)], "doc_a long, doc_b long")
-    out = {(r.doc_a, r.doc_b): r.jaccard for r in text.jaccard_pairs(sh, cand).collect()}
-    # docs 0/1 share 7 of 9 distinct bigrams -> 7/9
-    assert abs(out[(0, 1)] - 7 / 9) < 1e-12
-    assert (0, 2) not in out  # zero intersection drops out
-
-
-def test_simhash_distance_orders_similarity(spark, docs):
-    freqs = text.tokens(docs).groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("f"))
-    sims = {r.doc_id: r.simhash for r in text.simhash(freqs, bits=32).collect()}
-    d01 = bin(sims[0] ^ sims[1]).count("1")
-    d02 = bin(sims[0] ^ sims[2]).count("1")
-    assert d01 < d02  # near-dups closer than unrelated docs
-    assert 0 <= sims[0] < 2**32
-
-
-def test_vector_cosine(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0], [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0], [0.0, 1.0, 0.0])],
-        "id long, a array<double>, b array<double>",
+def test_jaccard_pairs_exact(spark):
+    # bigram sets: 0 = {ab..ij} (9), 1 = {ab..hi, ix} (9), 2 = {ab..gh,
+    # hy, yz} (9). J(0,1) = 8/10 sits exactly on the 0.8 threshold and
+    # must survive the prefix filter; J(0,2) = J(1,2) = 7/11 must not.
+    docs = spark.createDataFrame(
+        [
+            (0, "a b c d e f g h i j"),
+            (1, "a b c d e f g h i x"),
+            (2, "a b c d e f g h y z"),
+            (3, "completely different content here entirely"),
+        ],
+        "doc_id long, text string",
     )
-    out = {r.id: r.c for r in df.select("id", vector.cosine_sim(F.col("a"), F.col("b")).alias("c")).collect()}
-    assert abs(out[1] - 1.0) < 1e-12 and abs(out[2]) < 1e-12
+    out = {(r.doc_a, r.doc_b): r.jaccard for r in ngram_jaccard_pairs(docs).collect()}
+    assert out == {(0, 1): 0.8}
 
 
-def test_brute_force_topk(spark):
-    import random
-
-    rnd = random.Random(7)
-    rows = [(i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(50)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    quant = vector.quantize(emb)
-    probes = spark.createDataFrame([(0,)], "vec_id long")
-    top = vector.brute_force_topk(quant, probes, k=3).collect()
-    assert len(top) == 3 and all(r.probe_id == 0 and r.vec_id != 0 for r in top)
-    # exact check vs python
-    def cos(a, b):
-        qa = [math.floor(x * 10000) for x in a]
-        qb = [math.floor(x * 10000) for x in b]
-        dot = sum(x * y for x, y in zip(qa, qb))
-        na = math.sqrt(sum(x * x for x in qa))
-        nb = math.sqrt(sum(x * x for x in qb))
-        return dot / (na * nb)
-
+def test_brute_force_topk(spark, tmp_path):
+    """cosine_topk's quantized cosine (floor(x*1e4) integer dots) and
+    its (cosine desc, vec_id asc) ranking, recomputed in Python."""
     import numpy as np
 
-    a0 = [float(np.float32(v)) for v in rows[0][1]]
-    best = max(
-        ((j, cos(a0, [float(np.float32(v)) for v in rows[j][1]])) for j in range(1, 50)),
-        key=lambda t: t[1],
-    )
-    assert top[0].vec_id == best[0]
+    from goconnect_spark.queries.similarity import _N_PROBES, _TOP_K, cosine_topk
+
+    rng = np.random.RandomState(7)
+    vecs = (rng.rand(50, 16).astype(np.float32) * 2 - 1).tolist()
+    spark.createDataFrame(
+        [(i, [float(v) for v in vecs[i]], i % 4) for i in range(50)],
+        "vec_id long, embedding array<float>, label int",
+    ).coalesce(1).write.parquet(f"{tmp_path}/embeddings.parquet")
+    got = [(r.probe_id, r.rk, r.vec_id, r.cosine) for r in cosine_topk(spark, str(tmp_path)).collect()]
+
+    q = [[math.floor(x * 10000) for x in v] for v in vecs]
+    nrm = [math.sqrt(float(sum(a * a for a in qv))) for qv in q]
+    want = []
+    for p in range(_N_PROBES):
+        cos = sorted(
+            ((float(sum(a * b for a, b in zip(q[v], q[p]))) / (nrm[v] * nrm[p]), v)
+             for v in range(len(vecs)) if v != p),
+            key=lambda t: (-t[0], t[1]),
+        )[:_TOP_K]
+        want += [(p, rk, v, c) for rk, (c, v) in enumerate(cos, 1)]
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    for g, w in zip(got, want):
+        assert abs(g[3] - w[3]) < 1e-12, (g, w)
 
 
 def test_sr_wire_format_roundtrip(spark):
@@ -170,36 +167,6 @@ def test_xml_nodes_full_tree(spark):
     assert nodes[5].tag is None and root_tag.text is None
     # PERMISSIVE: null in, malformed in -> NULL out
     assert rows[1].n is None and rows[2].n is None
-
-
-def test_minhash_estimates_jaccard(spark):
-    # statistical validation: the banded-minhash signature agreement
-    # rate approximates the true Jaccard within sampling error
-    import random
-
-    rnd = random.Random(11)
-    vocab = [f"w{i}" for i in range(200)]
-    base = rnd.sample(vocab, 80)
-    rows = []
-    for d in range(20):
-        # each doc shares ~75% of the base set plus its own tail
-        words = [w for w in base if rnd.random() < 0.75] + rnd.sample(vocab, 20)
-        rows.append((d, " ".join(words)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = text.word_shingles(docs, n=1)
-    sig = text.minhash_signature(sh, n_hashes=24)
-    import pyspark.sql.functions as FF
-
-    wide = sig.groupBy("doc_id").pivot("seed", list(range(24))).agg(FF.first("mh"))
-    a = wide.where("doc_id = 0").collect()[0]
-    b = wide.where("doc_id = 1").collect()[0]
-    agree = sum(1 for s in range(24) if a[str(s)] == b[str(s)]) / 24
-    true_j = (
-        text.jaccard_pairs(sh, spark.createDataFrame([(0, 1)], "doc_a long, doc_b long"))
-        .collect()[0]
-        .jaccard
-    )
-    assert abs(agree - true_j) < 0.25  # 24 samples -> wide but real bound
 
 
 def test_grouping_sets_null_key_not_conflated_with_rollup(spark, tmp_path):

@@ -298,57 +298,6 @@ def test_streaming_limit_takes_first_n_and_stops(spark, sf_dir):
     assert seqs == expected
 
 
-def test_keyed_fold_tws_matches_batch(spark, events_stream):
-    """Spark 4 transformWithState backend: same UserFoldFn contract,
-    final snapshot equals the batch fold (mirrors the
-    applyInPandasWithState test above). Skipped when the protobuf
-    runtime TWS depends on is absent (this container); the gate itself
-    is asserted either way."""
-    import pyspark.sql.functions as F
-
-    from goconnect_spark.streaming.stateful import keyed_fold_tws, tws_available
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            keyed_fold_tws(
-                events_stream.read(spark).select(F.col("value.l_returnflag").alias("flag"),
-                                                 F.col("value.l_quantity").alias("qty")),
-                "flag", "qty", init=0.0, update=lambda a, v: a + v,
-            )
-        pytest.skip("google.protobuf not installed: TWS backend gated")
-
-    df = events_stream.read(spark).select(
-        F.col("value.l_returnflag").alias("flag"),
-        F.col("value.l_quantity").alias("qty"),
-    )
-    folded = keyed_fold_tws(df, "flag", "qty", init=0.0, update=lambda acc, v: acc + v)
-    q = (
-        folded.writeStream.format("memory")
-        .queryName("t_keyed_fold_tws")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        """
-        select key, acc, n from (
-          select *, row_number() over (partition by key order by n desc) rk
-          from t_keyed_fold_tws
-        ) where rk = 1
-        """
-    ).collect()
-    got = {r.key: (round(r.acc, 6), r.n) for r in rows}
-    batch = (
-        spark.read.parquet(events_stream.path)
-        .groupBy("l_returnflag")
-        .agg(F.sum("l_quantity").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    want = {r.l_returnflag: (round(r.s, 6), r.n) for r in batch}
-    assert got == want
-
-
 def test_streaming_limit_multi_batch_is_first_n_by_arrival(spark, tmp_path):
     """Across micro-batches StreamingLimit is first-n-by-ARRIVAL
     (seq-ordered within each batch), per its documented contract: an
@@ -729,3 +678,32 @@ def test_parquet_source_clean_source_deletes_processed_files(spark, tmp_path):
             break
         time.sleep(0.5)
     assert len(glob.glob(f"{d}/*.parquet")) <= 1
+
+
+def _ann_pair_batch(width):
+    import pyarrow as pa
+
+    vec = pa.list_(pa.int16())
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([1, 2], pa.int64()),
+            pa.array([3, 4], pa.int64()),
+            pa.array([8.0, 16.0]),
+            pa.array([8.0, 8.0]),
+            pa.array([[1] * width, [2] * width], vec),
+            pa.array([[1] * width, [-1] * width], vec),
+        ],
+        ["probe_id", "vec_id", "nrm", "pnrm", "q16", "pq16"],
+    )
+
+
+def test_ann_pair_cosines_rejects_wrong_width():
+    """streaming_ann_lookup's Arrow scorer reshapes flat buffers into
+    64-d rows: two 32-wide rows must raise, not fold into one 64-d
+    row whose cosine is broadcast to both pairs."""
+    from goconnect_spark.queries.streaming_queries import _pair_cosines
+
+    out = list(_pair_cosines([_ann_pair_batch(64)]))[0].to_pydict()
+    assert out == {"probe_id": [1, 2], "cosine": [1.0, -1.0], "vec_id": [3, 4]}
+    with pytest.raises(ValueError, match="64-wide"):
+        list(_pair_cosines([_ann_pair_batch(32)]))

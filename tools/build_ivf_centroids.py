@@ -18,28 +18,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyspark.sql.functions as F  # noqa: E402
-
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    from goconnect_spark.queries.similarity import train_ivf_centroids
     from goconnect_spark.session import get_spark
-    from goconnect_spark.tables import load
 
     spark = get_spark("ivf-build")
     spark.sparkContext.setLogLevel("ERROR")
-    emb = load(spark, "embeddings", sf_dir)
-    feats = emb.select(array_to_vector(F.col("embedding").cast("array<double>")).alias("features"))
-    model = KMeans(k=8, seed=42, maxIter=10).fit(feats)
+    centroids = train_ivf_centroids(spark, sf_dir)
     print(f"# k-means centroids, trained on {sf_dir} (k=8, seed=42, maxIter=10), floor(c*1e4)")
     print("_IVF_CENTROIDS_Q = [")
-    import math
-
-    for c in model.clusterCenters():
-        qs = [math.floor(x * 10000) for x in c]
+    for _, qs in centroids:
         print("    [" + ", ".join(str(q) for q in qs) + "],")
     print("]")
 
