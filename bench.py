@@ -1,38 +1,42 @@
-"""Benchmark harness: runs EVERY catalog query at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times catalog queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+ONE JSON line on stdout:
   {"metric": "headline31_total_wall", "value": N, "unit": "sec",
-   "queries": {...headline queries...}, "calibration_wall": C,
-   "all_queries_total_wall": M, "n_queries_all": K, "sf": ...}
+   "calibration_wall": C, ..., "queries": {...headline queries...},
+   "all_queries_total_wall": M, "n_queries_all": K, "failed": [...],
+   ..., "sf": ...}
 
-Since round 7 the headline set is 34 queries (the legacy 31 plus three
-round-6 family representatives). Since round 8 `value` is BACK to the
-legacy 31-query total (ADVICE r7: it silently changed meaning to the
-34-query total in r7, making cross-round `value` comparisons read a
-spurious ~3-query regression) — the 34-query total is reported under
-`headline34_total_wall`, and `headline31_total_wall` stays as the
-explicit alias every r6+ consumer already reads. The same run also
-times the full catalog so regressions in non-headline queries are
-visible (`all_queries_total_wall`). Set BENCH_HEADLINE_ONLY=1 to skip
-the catalog tail while iterating locally.
+    python bench.py [query ...]
 
-`calibration_wall` (round 8, VERDICT r7 item 3): a FIXED-WORK
-synthetic aggregate (sum over spark.range — constant rows, constant
-expression, no I/O, no shuffle) timed in the same session before the
-query passes. The r7 driver capture ran ~1.28x slower UNIFORMLY
-across all 31 common queries — indistinguishable from a real global
-regression without a yardstick. Dividing any round-over-round query
-ratio by the calibration ratio normalizes box-speed drift out
-mechanically; tools/bench_diff.py reports both raw and calibrated
-ratios when both artifacts carry a calibration.
+With no names it runs EVERY catalog query, headline first; with names
+it runs just those (an unknown name is an error before any work
+starts). This is the one way to time catalog queries at any scale:
+point $SPARK_GRAFT_SF_DIR at tools/gen_scale_data.py output and compare
+two stderr captures with tools/bench_diff.py (SCALING.md, "Measuring
+at scale"). Each query's wall is the MIN of three passes of
+`.count()`. A query that raises is reported on stderr, skipped in later
+passes, left out of every total and listed under "failed".
+
+`value` is the legacy 31-query headline total (`headline31_total_wall`
+is its explicit alias); the 34-query set adds three family
+representatives and is reported as `headline34_total_wall`.
+
+Box-speed yardsticks: three fixed-work probes (codegen aggregate,
+shuffle groupBy, partitioned window sort) timed in the same session
+before the passes. Dividing a query ratio across two captures by the
+probe ratio normalizes box-speed drift out; tools/bench_diff.py reports
+raw and calibrated ratios, and the `*_calibrated` fields divide by the
+sort probe.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,7 +66,7 @@ HEADLINE = [
     "text_token_stats",
     "doc_fingerprint",
     "sequence_packing",
-    # round-2 tail: range join, sketches, co-occurrence, funnel
+    # range join, sketches, co-occurrence, funnel
     "events_in_error_windows",
     "word_freq_cms",
     "word_cooccurrence",
@@ -71,11 +75,9 @@ HEADLINE = [
     "q13_order_count_distribution",
 ]
 
-# round-6 family representatives promoted in round 7 (VERDICT r6
-# item 6) so regressions in the PQ/IVM/BM25 families gate
-# mechanically. Kept OUT of the legacy-comparable 31-query total
-# (`headline31_total_wall` below) so round-over-round comparisons
-# stay apples-to-apples.
+# PQ/IVM/BM25 family representatives, gated with the headline but kept
+# OUT of the legacy 31-query total so `value` stays comparable across
+# captures.
 HEADLINE_R7 = [
     "ann_ivfpq_topk",
     "streaming_ivm_hourly_counts",
@@ -85,55 +87,21 @@ HEADLINE31 = list(HEADLINE)
 HEADLINE = HEADLINE + HEADLINE_R7
 
 
-def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from goconnect_spark.queries import all_queries
-    from goconnect_spark.session import get_spark
+def calibrate(spark) -> dict:
+    """Fixed-work box-speed probes, printed to stderr and returned under
+    their stdout keys:
+     - calibration_wall: 2B-row codegen aggregate (pure JVM CPU), median
+       of 5;
+     - shuffle_calibration_wall: 4M-row 64-partition groupBy round trip
+       (scheduler + exchange overhead, which can drift while the CPU
+       probe stays flat), median of 5;
+     - sort_calibration_wall: 8M rows shuffled to 64 hash partitions,
+       sorted, row_number'd and reduced (exchange + sort + codegen, the
+       blend closest to real query walls), trimmed mean of 5.
+    Each comes with its max/min spread so a consumer can refuse an
+    unstable calibration."""
 
-    spark = get_spark("goconnect-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-    if os.environ.get("BENCH_HEADLINE_ONLY"):
-        to_run = [n for n in HEADLINE if n in qs]
-    else:
-        # headline first (their MINs settle early), then the catalog tail
-        to_run = [n for n in HEADLINE if n in qs] + [
-            n for n in qs if n not in HEADLINE
-        ]
-
-    # warm up the JVM + parquet footer caches with one tiny action
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-
-    # fixed-work box-speed yardsticks, each the MEDIAN of 5 probes.
-    # Round 12 rework (VERDICT r11 items 1+2): a min-of-2 probe swung
-    # 0.36<->0.74 s across back-to-back idle-box runs, and worse, the
-    # r12 A/B bisect proved the pure-codegen probe measures a dimension
-    # that can stay FLAT while real query walls drift 1.45x (r10 code
-    # re-run on the r12 box: 25.5 s headline at calibration 0.384 vs
-    # the recorded 15.26 s at 0.394 — the drift lives in scheduler/
-    # shuffle/JVM overhead, not codegen CPU). So:
-    #  - calibration_wall: 2B-row codegen aggregate (pure JVM CPU),
-    #    median of 5, with the probe spread (max/min) reported so a
-    #    consumer can refuse an unstable calibration;
-    #  - shuffle_calibration_wall: fixed-work 64->shuffle groupBy round
-    #    trip — scheduler + exchange overhead, the dimension that
-    #    actually moved on the r11/r12 driver boxes.
-    import statistics
-
-    # untimed warm-ups: the first executions carry JIT/codegen tiers
-    # that would otherwise inflate the spread metric with warm-up
-    # decay, not instability (measured: the cpu probe keeps dropping
-    # 0.51 -> 0.27 s over its first ~5 runs on an idle 32-thread box)
-    # third probe (VERDICT r13 item 1 "what's wrong": the cpu probe
-    # has been UNSTABLE two driver rounds running, leaving the
-    # uniform-drift gate standing on the shuffle probe alone): a
-    # fixed-work partitioned window sort — 8M rows shuffled to 64
-    # hash partitions, sorted per partition, row_number'd and
-    # reduced — exercises exchange + sort + codegen together, the
-    # blend closest to real query walls. Estimator is the TRIMMED
-    # MEAN of 5 (drop max and min, mean of the middle 3): more
-    # sample-efficient than the median when one straggler lands.
-    def _sort_probe_once():
+    def sort_probe():
         (
             spark.range(0, 8_000_000, 1, 32)
             .selectExpr("id % 64 as p", "hash(id) as h")
@@ -146,12 +114,14 @@ def main():
             .collect()
         )
 
+    # untimed warm-ups: the first executions carry JIT/codegen tiers
+    # that would otherwise inflate the spread with warm-up decay
     for _ in range(2):
         spark.range(0, 500_000_000, 1, 32).selectExpr(
             "sum(id * 3 + 7) as s").collect()
         spark.range(0, 4_000_000, 1, 64).selectExpr(
             "id % 9973 as k").groupBy("k").count().count()
-        _sort_probe_once()
+        sort_probe()
     cpu_probes, sched_probes, sort_probes = [], [], []
     for _ in range(5):
         t0 = time.time()
@@ -165,41 +135,78 @@ def main():
         ).groupBy("k").count().count()
         sched_probes.append(time.time() - t0)
         t0 = time.time()
-        _sort_probe_once()
+        sort_probe()
         sort_probes.append(time.time() - t0)
-    calib = round(statistics.median(cpu_probes), 3)
-    calib_spread = round(max(cpu_probes) / max(1e-9, min(cpu_probes)), 3)
-    sched_calib = round(statistics.median(sched_probes), 3)
-    sched_spread = round(max(sched_probes) / max(1e-9, min(sched_probes)), 3)
-    sort_calib = round(statistics.mean(sorted(sort_probes)[1:-1]), 3)
-    sort_spread = round(max(sort_probes) / max(1e-9, min(sort_probes)), 3)
-    print(f"# calibration_wall {calib}s (2B-row fixed-work aggregate; "
-          f"median of 5)", file=sys.stderr)
-    print(f"# calibration_spread {calib_spread}x (max/min of 5 probes)",
-          file=sys.stderr)
-    print(f"# shuffle_calibration_wall {sched_calib}s (4M-row 64-part "
-          f"groupBy; median of 5)", file=sys.stderr)
-    print(f"# shuffle_calibration_spread {sched_spread}x (max/min of 5)",
-          file=sys.stderr)
-    print(f"# sort_calibration_wall {sort_calib}s (8M-row 64-part window "
-          f"sort; trimmed mean of 5)", file=sys.stderr)
-    print(f"# sort_calibration_spread {sort_spread}x (max/min of 5)",
-          file=sys.stderr)
+
+    def spread(probes):
+        return round(max(probes) / max(1e-9, min(probes)), 3)
+
+    probes = {
+        "calibration_wall": round(statistics.median(cpu_probes), 3),
+        "calibration_spread": spread(cpu_probes),
+        "shuffle_calibration_wall": round(statistics.median(sched_probes), 3),
+        "shuffle_calibration_spread": spread(sched_probes),
+        "sort_calibration_wall": round(statistics.mean(sorted(sort_probes)[1:-1]), 3),
+        "sort_calibration_spread": spread(sort_probes),
+    }
+    for key, note in [
+        ("calibration_wall", "s (2B-row fixed-work aggregate; median of 5)"),
+        ("calibration_spread", "x (max/min of 5 probes)"),
+        ("shuffle_calibration_wall", "s (4M-row 64-part groupBy; median of 5)"),
+        ("shuffle_calibration_spread", "x (max/min of 5)"),
+        ("sort_calibration_wall", "s (8M-row 64-part window sort; trimmed mean of 5)"),
+        ("sort_calibration_spread", "x (max/min of 5)"),
+    ]:
+        print(f"# {key} {probes[key]}{note}", file=sys.stderr)
+    return probes
+
+
+def main(names=None):
+    names = sys.argv[1:] if names is None else names
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from goconnect_spark.queries import all_queries
+    from goconnect_spark.session import get_spark
+
+    qs = all_queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"bench.py: unknown queries: {' '.join(unknown)}")
+    if names:
+        to_run = list(dict.fromkeys(names))
+    else:
+        # headline first (their MINs settle early), then the catalog tail
+        to_run = [n for n in HEADLINE if n in qs] + [
+            n for n in qs if n not in HEADLINE
+        ]
+
+    spark = get_spark("goconnect-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # warm up the JVM + parquet footer caches with one tiny action
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    probes = calibrate(spark)
 
     # three passes, keep the per-query MIN: the steady-state cost of
-    # the plan, insulated from CI-box scheduler noise (observed ~30%
-    # total swing between idle and loaded runs of identical code) AND
-    # from cache-retention nondeterminism — the r12 back-to-back pair
-    # showed a shared-token-cache consumer at 0.45 s in one run and
-    # 1.5 s in the other because the MEMORY_AND_DISK cache happened to
-    # stay cold through pass 1; with two warm passes the MIN reliably
-    # lands on a warm-cache execution
+    # the plan, insulated from scheduler noise and from cache-retention
+    # nondeterminism (a MEMORY_AND_DISK shared cache can stay cold
+    # through pass 1; with two warm passes the MIN lands on a warm one)
     times: dict[str, float] = {}
+    failed: list[str] = []
     for pass_no in range(3):
         for name in to_run:
-            fn = qs[name]
+            if name in failed:
+                continue
             t0 = time.time()
-            n = fn(spark, sf_dir).count()  # full materialization of the result
+            try:
+                n = qs[name](spark, sf_dir).count()
+            except Exception as e:
+                # one failing (or OOM) query is recorded, not fatal
+                failed.append(name)
+                times.pop(name, None)
+                print(f"# pass{pass_no} {name}: FAILED {type(e).__name__}",
+                      file=sys.stderr)
+                traceback.print_exc(file=sys.stderr)
+                continue
             dt = round(time.time() - t0, 3)
             times[name] = min(times.get(name, dt), dt)
             print(f"# pass{pass_no} {name}: {dt}s ({n} rows)", file=sys.stderr)
@@ -209,46 +216,28 @@ def main():
     all_total = round(sum(times.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Full per-query map (130 entries, ~4 KB) goes to STDERR: the driver
-    # keeps only a ~2 KB tail of stdout, and in round 4 the big map pushed
-    # the headline metric out of the retained window (BENCH_r04 parsed:null).
+    # The per-query maps go to STDERR: a consumer that keeps only a ~2 KB
+    # tail of stdout must still see the whole final JSON line.
     print("# all_query_times " + json.dumps(times), file=sys.stderr)
-    # Probe-calibrated values (round 15, VERDICT r14 item 2): the r14
-    # driver compared raw walls across a 1.9-2.4x box-class gap and
-    # read "33 of 34 regressed" for a round that removed work — the
-    # repo printed probes but no calibrated numbers a mechanical
-    # consumer could read directly. Calibrated = wall divided by the
-    # SORT probe (the stable one: trimmed-mean estimator, idle-box
-    # spread 1.06-1.17x vs the cpu probe's 1.8-3.7x), so equal-work
-    # runs on different boxes read ~equal calibrated values. The
-    # per-query calibrated map goes to STDERR (same 2 KB-tail reason
-    # as above); the stdout line carries the calibrated TOTALS —
-    # additions only, every raw field byte-compatible.
+    sort_calib = probes["sort_calibration_wall"]
     denom = sort_calib if sort_calib > 0 else 1.0
     print(
         "# queries_calibrated "
         + json.dumps({n: round(t / denom, 3) for n, t in times.items()}),
         file=sys.stderr,
     )
-    # Final stdout line stays compact (<1.5 KB): headline-only query map +
-    # both totals, so the driver's tail always contains the whole object.
+    # Final stdout line stays compact (~1.6 KB at 34 headline queries,
+    # inside a 2 KB tail): headline-only query map, the totals and the
+    # names of failed queries.
     print(
         json.dumps(
             {
                 "metric": "headline31_total_wall",
                 "value": headline31_total,
                 "unit": "sec",
-                # box fingerprint FIRST (VERDICT r12 item 6): the
-                # cpu+shuffle probe pair distinguishes box classes, so
-                # leading with it makes a cross-round capture
-                # self-explaining — read any round-over-round delta
+                # box fingerprint first: read any cross-capture delta
                 # through tools/bench_diff.py, never as raw walls
-                "calibration_wall": calib,
-                "calibration_spread": calib_spread,
-                "shuffle_calibration_wall": sched_calib,
-                "shuffle_calibration_spread": sched_spread,
-                "sort_calibration_wall": sort_calib,
-                "sort_calibration_spread": sort_spread,
+                **probes,
                 # n_queries pairs with value/metric (the 31-query
                 # legacy total); the queries map carries the wider
                 # 34-query headline set, counted by n_queries_headline
@@ -259,12 +248,9 @@ def main():
                 "headline34_total_wall": headline_total,
                 "all_queries_total_wall": all_total,
                 "n_queries_all": len(times),
-                # sort-probe-calibrated totals (r15, VERDICT r14 item
-                # 2): box-drift-proof by construction — divide any
-                # wall by the same run's sort probe before comparing
-                # across rounds. Per-query calibrated map: stderr
-                # `# queries_calibrated` (stdout stays under the
-                # driver's 2 KB tail).
+                "failed": failed,
+                # totals divided by the same run's sort probe; the
+                # per-query map is stderr `# queries_calibrated`
                 "calibration_divisor": "sort_calibration_wall",
                 "headline31_calibrated": round(headline31_total / denom, 3),
                 "headline34_calibrated": round(headline_total / denom, 3),

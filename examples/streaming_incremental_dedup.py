@@ -12,9 +12,10 @@ the production shape of continuous corpus ingest:
 
 At 100 TB the store is a first-class table bucketed by band_key; each
 batch's probe cost tracks the BATCH (new-side band rows), never the
-corpus — measured flat in tools/scale_bench_dedup.py as the corpus
-grows 10x. Batch-vs-batch dedup works because every accepted batch
-folds its signatures into the store before the next trigger.
+corpus — dedup_incremental_new_batch measured flat as the corpus grows
+10x (SCALING.md, "Measured round-5 family scaling"). Batch-vs-batch
+dedup works because every accepted batch folds its signatures into the
+store before the next trigger.
 
 Run: python examples/streaming_incremental_dedup.py
 """

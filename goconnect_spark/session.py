@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the goconnect_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _DEFAULTS = {
     # Adaptive execution: runtime re-planning, skew-join splitting and
     # post-shuffle coalescing — the main lever that keeps static plans
@@ -55,6 +58,10 @@ def get_spark(app_name: str = "goconnect-spark", **overrides: str) -> SparkSessi
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     conf = dict(_DEFAULTS)
     conf.setdefault("spark.sql.shuffle.partitions", cpus)
+    # Python workers resolve UDFs that reference goconnect_spark
+    # modules by import; without this they find the package only when
+    # the process runs from the directory that holds it.
+    conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_ROOT
     conf.update(overrides)
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -73,6 +73,16 @@ def streaming_fold(
     return w.start()
 
 
+def _watermarked(stream: DataFrame, event_time_col: str, watermark: str) -> DataFrame:
+    """Declare `watermark` on `event_time_col` unless the stream already
+    carries a watermark there, so the helpers below chain: Spark rejects
+    a second declaration once the watermark advances. An existing
+    declaration wins, and its delay applies instead of `watermark`."""
+    if "spark.watermarkDelayMs" in stream.schema[event_time_col].metadata:
+        return stream
+    return stream.withWatermark(event_time_col, watermark)
+
+
 def windowed_counts(
     stream: DataFrame,
     event_time_col: str = "event_time",
@@ -80,10 +90,11 @@ def windowed_counts(
     watermark: str = "2 hours",
     keys: Sequence[str] = (),
 ):
-    """Event-time tumbling window aggregation with late-data watermark.
-    Returns the (unstarted) aggregated streaming DataFrame."""
+    """Event-time tumbling window aggregation with late-data watermark
+    (a watermark the stream already declares is reused). Returns the
+    (unstarted) aggregated streaming DataFrame."""
     return (
-        stream.withWatermark(event_time_col, watermark)
+        _watermarked(stream, event_time_col, watermark)
         .groupBy(F.window(event_time_col, window), *keys)
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -97,9 +108,10 @@ def session_counts(
     keys: Sequence[str] = ("user_id",),
 ):
     """Session-window aggregation (gap-based) — the streaming twin of
-    queries.events_series.user_sessions."""
+    queries.events_series.user_sessions. A watermark the stream already
+    declares is reused."""
     return (
-        stream.withWatermark(event_time_col, watermark)
+        _watermarked(stream, event_time_col, watermark)
         .groupBy(F.session_window(F.col(event_time_col), gap), *keys)
         .agg(F.count(F.lit(1)).alias("session_events"))
     )
@@ -113,8 +125,9 @@ def streaming_dedup(
 ) -> DataFrame:
     """Exact streaming dedup within the watermark horizon
     (dropDuplicatesWithinWatermark keeps state bounded — the 100 TB
-    streaming-dedup primitive)."""
-    return stream.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(list(key_cols))
+    streaming-dedup primitive). A watermark the stream already declares
+    is reused."""
+    return _watermarked(stream, event_time_col, watermark).dropDuplicatesWithinWatermark(list(key_cols))
 
 
 def run_bounded(

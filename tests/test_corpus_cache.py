@@ -80,7 +80,7 @@ def test_cached_table_stats_are_actual_not_estimated(spark, tmp_path):
 _STOP_THEN_NEW_SESSION = """
 import sys
 from pyspark.sql import SparkSession
-from goconnect_spark.queries import corpus
+from goconnect_spark.queries import corpus, pq
 
 def session():
     return (SparkSession.builder.master("local[1]")
@@ -89,6 +89,7 @@ def session():
 first = session()
 corpus.cached_table(first, sys.argv[1], "a", lambda: first.range(3))
 corpus.cached_table(first, sys.argv[1], "b", lambda: first.range(4))
+pq._cb(first)
 first_app = first.sparkContext.applicationId
 first.stop()
 
@@ -97,6 +98,8 @@ df = corpus.cached_table(second, sys.argv[1], "a", lambda: second.range(5))
 app = second.sparkContext.applicationId
 assert app != first_app
 assert [k[0] for k in corpus._CACHE] == [app], corpus._CACHE
+assert pq._cb(second).count() == len(pq._cb_rows())
+assert list(pq._CB_DF) == [app], pq._CB_DF
 assert df.count() == 5
 second.stop()
 """
@@ -104,9 +107,10 @@ second.stop()
 
 def test_cached_table_drops_stopped_sessions(tmp_path):
     """Entries of a stopped application are evicted on the next
-    lookup: after stop + new session the registry holds only the new
-    application's tables, and a kind cached before the stop is
-    rebuilt rather than served from the dead context."""
+    lookup: after stop + new session the registry (and pq's codebook
+    memo) holds only the new application's tables, and a kind cached
+    before the stop is rebuilt rather than served from the dead
+    context."""
     import os
     import subprocess
     import sys

@@ -597,6 +597,50 @@ def test_windowed_agg_state_is_evicted_by_watermark(spark, tmp_path):
     assert emitted >= 60  # the first two batches' windows all closed
 
 
+def test_dedup_then_windowed_counts_chain_on_default_session(spark, tmp_path):
+    """streaming_dedup -> windowed_counts shares one event-time
+    watermark: on a default session (no allowMultiple override) the
+    chain drains three batches 10 days apart, the watermark advances
+    past the earlier windows, and append mode emits them deduplicated."""
+    import datetime as dt
+    import time
+
+    from goconnect_spark.streaming.run import streaming_dedup, windowed_counts
+
+    d = str(tmp_path / "ev3")
+    t0 = dt.datetime(2026, 5, 1, 0, 0, 0)
+    for b in range(3):
+        # every key arrives twice; a batch's 30 keys share one 1h window
+        rows = [
+            (b * 1000 + i, t0 + dt.timedelta(days=10 * b, minutes=i))
+            for i in range(30)
+        ] * 2
+        spark.createDataFrame(rows, ["k", "event_time"]).coalesce(1).write.mode(
+            "append"
+        ).parquet(d)
+        time.sleep(1.1)
+
+    stream = (
+        spark.readStream.schema("k bigint, event_time timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
+    )
+    deduped = streaming_dedup(stream, ["k"], watermark="1 hour")
+    agg = windowed_counts(deduped, window="1 hour", watermark="1 hour")
+    q = (
+        agg.select(F.col("window.start").alias("ws"), "n")
+        .writeStream.format("memory")
+        .queryName("t_chain_dedup_win")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    # the first two batches' windows closed, each key counted once
+    emitted = spark.sql("select sum(n) s from t_chain_dedup_win").collect()[0].s
+    assert emitted == 60, emitted
+
+
 def test_streaming_bpe_tokenize_matches_batch(spark, sf_dir, tmp_path):
     # BPE application is stateless map-side work — the ideal streaming
     # shape: a document STREAM tokenized with the frozen merge table

@@ -34,8 +34,9 @@ larger corpus fraction than any Zipf-distributed real corpus):
   the merge-count-flat claims: identical join/reassembly work at 24
   and 240 merges.
 
-The docs dimension (multiplier m, same replica-prefix synthesis as
-scale_bench_dedup) is measured alongside so the table shows BOTH axes.
+The docs dimension (multiplier m: m replicas of the sf0.1 documents,
+each word prefixed per replica) is measured alongside so the table
+shows BOTH axes.
 Record results in SCALING.md.
 
 Round 9 adds the THIRD merge-count point: a 2,400-merge fixture
