@@ -18,7 +18,7 @@ Stages (each a real operator from goconnect_spark.operators.multimodal):
      honestly needs libjpeg -> quarantine)
   3. media_repartition — bytes-per-partition balancing (row counts
      are meaningless for binary payloads)
-  4. route: decodable rows -> extract_features(decode_stub=False)
+  4. route: decodable rows -> extract_features
      (features computed from DECODED pixels/PCM); everything else ->
      a quarantine count by format
   4b. resize_images — image rows decoded, exact-integer bilinear
@@ -224,8 +224,7 @@ def main() -> None:
     is_decodable = is_decodable | (F.col("media_meta.format") == "gif")
     decodable = classified.where(is_decodable)
     quarantined = classified.where(~is_decodable | is_decodable.isNull())
-    feats = extract_features(media_repartition(decodable, target_bytes=4096),
-                             decode_stub=False)
+    feats = extract_features(media_repartition(decodable, target_bytes=4096))
 
     # 5. per-kind feature centroid (features are normalized histograms
     # of the DECODED samples, so the centroid is one too)

@@ -17,8 +17,20 @@ distributed:
   array (`F.aggregate` — whole-stage codegen, no Python in the loop),
   which reproduces greedy left-to-right non-overlapping replacement
   exactly (for "aaa" with merge (a,a): [aa, a], not [a, aa]);
-- `localCheckpoint` truncates the per-iteration lineage (the Spark
-  iterative-plan pitfall, same as operators/graph.py).
+- `localCheckpoint` every few merges truncates the lineage: each
+  merge's argmax is a driver action that would otherwise re-run every
+  earlier fold.
+
+Application has one serving path and two references:
+
+- `apply_bpe_wordlevel` serves: the corpus' distinct words go through
+  the Arrow tokenizer `tokenize_words_py` (per-word cost independent
+  of table size), and a broadcast join reassembles each document;
+- `apply_bpe_replace` is the whole-document replace chain (one
+  `replace()` per merge, capped at SQL_CHAIN_MAX_MERGES), replayed
+  character for character by its DuckDB twins;
+- `apply_bpe` is the per-word fold that shares `_merge_fold` with the
+  trainer.
 
 The reference engine has no tokenizer layer (SURVEY §2.8); this is
 LLM-pipeline mandate surface. Cross-checked against the sequential
@@ -184,15 +196,14 @@ def apply_bpe(
 # --------------------------------------------------------------------
 _SEND = "\x02"  # symbol-end marker
 
-# Soft cap on the Spark-side replace chain: each merge adds one nested
+# Cap on the Spark-side replace chain: each merge adds one nested
 # replace() Column node, and the JVM's Column-node-to-expression
 # conversion recurses per node — measured on this runtime (default
 # thread stack), 300 nested replaces build fine and 350 overflow the
 # stack (java.lang.StackOverflowError at PLAN CONSTRUCTION, before any
-# data moves). The cap turns that opaque crash into a contract error
-# pointing at the table-size-independent Arrow engine. It is a
-# per-call parameter, not a hard limit: the true boundary depends on
-# -Xss, so callers on a deeper stack may raise it deliberately.
+# data moves). The cap turns that opaque crash into a ValueError
+# pointing at `apply_bpe_wordlevel`, whose Arrow tokenizer has no
+# table-size limit.
 SQL_CHAIN_MAX_MERGES = 300
 
 
@@ -238,29 +249,26 @@ def apply_bpe_replace(
     merges: List[Tuple[str, str]],
     text_col: str = "text",
     out_col: str = "bpe_tokens",
-    max_sql_merges: "int | None" = SQL_CHAIN_MAX_MERGES,
 ) -> DataFrame:
     """Tokenize with a learned merge table via the replace chain —
     one `replace()` per merge, all in-row, all codegen. Produces the
-    identical token stream as `apply_bpe` (property-tested).
+    identical token stream as `apply_bpe` (property-tested). On a
+    DISTINCT-word table (`text_col="word"`) this is the vocab-sized
+    reference that `tokenize_words_py` is property-tested against: a
+    single word encodes exactly like a one-word document.
 
-    Refuses tables beyond `max_sql_merges` (default
-    SQL_CHAIN_MAX_MERGES): past ~300-350 nested replaces the JVM
-    overflows its stack while CONVERTING the Column tree, an opaque
-    crash this guard replaces with a pointed error. Large tables
-    belong on the Arrow engine (`tokenize_words_py` /
-    `apply_bpe_wordlevel(engine="python")`), whose per-word cost is
-    independent of table size; pass `max_sql_merges=None` (or a
-    higher cap on a deeper-stack JVM) to build the chain anyway."""
-    if max_sql_merges is not None and len(merges) > max_sql_merges:
+    Refuses tables beyond SQL_CHAIN_MAX_MERGES: past ~300-350 nested
+    replaces the JVM overflows its stack while CONVERTING the Column
+    tree, an opaque crash this guard replaces with a pointed error.
+    Large tables belong on `apply_bpe_wordlevel`, whose Arrow
+    tokenizer's per-word cost is independent of table size."""
+    if len(merges) > SQL_CHAIN_MAX_MERGES:
         raise ValueError(
             f"SQL replace chain at {len(merges)} merges exceeds "
-            f"max_sql_merges={max_sql_merges}: the nested replace() "
-            "Column tree overflows the JVM stack at plan construction "
-            "(measured boundary 300-350 on a default thread stack). "
-            "Use tokenize_words_py / apply_bpe_wordlevel("
-            "engine='python') for large tables, or raise the cap "
-            "explicitly if your JVM stack allows it."
+            f"SQL_CHAIN_MAX_MERGES={SQL_CHAIN_MAX_MERGES}: the nested "
+            "replace() Column tree overflows the JVM stack at plan "
+            "construction (measured boundary 300-350 on a default "
+            "thread stack). Use apply_bpe_wordlevel for large tables."
         )
     _assert_no_straddle(merges)
     enc = encode_doc(F.col(text_col))
@@ -350,64 +358,40 @@ def apply_bpe_replace_sql_staged(
 
 
 # --------------------------------------------------------------------
-# Word-level application: the MERGE-COUNT-SCALABLE production path
-# (VERDICT r7 item 2). The replace chain above is one full-document
-# string pass PER MERGE — fine at the frozen 24 merges, a scale-killer
-# at a production 32k-merge vocab (O(n_merges) passes over every
-# document, and a 32k-deep Catalyst expression tree besides). BPE is
-# deterministic per word, so the training trick applies to inference
-# too: tokenize each DISTINCT word once (vocab-sized work — any
-# per-merge loop is affordable there), then broadcast-join the
+# Word-level application: the MERGE-COUNT-SCALABLE serving path. The
+# replace chain above is one full-document string pass PER MERGE —
+# fine at the frozen 24 merges, a scale-killer at a production
+# 32k-merge vocab (O(n_merges) passes over every document, and a
+# 32k-deep Catalyst expression tree besides). BPE is deterministic per
+# word, so the training trick applies to inference too: tokenize each
+# DISTINCT word once (vocab-sized work), then broadcast-join the
 # word→tokens map back onto the corpus. The corpus-side plan is then
 # INDEPENDENT of merge count: one posexplode, one equi-join, one
 # per-doc positional reassembly — identical whether the table has 24
-# merges or 32k. (At web scale the distinct-word table may outgrow a
-# broadcast; pass broadcast_vocab=False to fall back to a shuffle
-# equi-join on the word key — same plan shape, still merge-count-
-# independent.)
+# merges or 32k.
 # --------------------------------------------------------------------
-def tokenize_distinct_words(
-    words: DataFrame,
-    merges,
-    word_col: str = "word",
-    out_col: str = "toks",
-    max_sql_merges: "int | None" = SQL_CHAIN_MAX_MERGES,
-) -> DataFrame:
-    """(word, toks): replace-chain tokenization of each row's word —
-    meant for a DISTINCT-word table, where the per-merge chain is
-    vocab-sized work. A single word encodes exactly like a one-word
-    document, so this IS `apply_bpe_replace` on the word column
-    (including its `max_sql_merges` expression-depth contract)."""
-    return apply_bpe_replace(
-        words, merges, text_col=word_col, out_col=out_col,
-        max_sql_merges=max_sql_merges,
-    )
-
-
 def tokenize_words_py(
     words: DataFrame,
     merges: List[Tuple[str, str]],
     word_col: str = "word",
     out_col: str = "toks",
 ) -> DataFrame:
-    """Arrow pandas_udf twin of `tokenize_distinct_words` for merge
-    tables too LARGE for a SQL expression tree: the replace chain is
-    one nested `replace()` per merge — ideal at the frozen 24, hostile
-    to Catalyst at a production 32k (expression depth, codegen method
-    size). This path keeps the vocab-side work vocab-sized at ANY
-    table size: per word, merges are applied with EXACTLY the chain's
-    semantics — in table order, each greedily left-to-right — but
-    scheduled via a rank map so each step only scans the pairs
-    actually adjacent in the word (O(applied merges x |word|), not
-    O(|table|)). Rank monotonicity is load-bearing: a merge can
+    """(word, toks): Arrow pandas_udf tokenization of each row's word,
+    the vocab-side tokenizer of `apply_bpe_wordlevel`. The replace
+    chain (`apply_bpe_replace` on a word table) is one nested
+    `replace()` per merge — hostile to Catalyst at a production 32k
+    (expression depth, codegen method size). This path keeps the
+    vocab-side work vocab-sized at ANY table size: per word, merges
+    are applied with EXACTLY the chain's semantics — in table order,
+    each greedily left-to-right — but scheduled via a rank map so each
+    step only scans the pairs actually adjacent in the word
+    (O(applied merges x |word|), not O(|table|)). Rank monotonicity is load-bearing: a merge can
     create a symbol that collides with an EARLIER merge's pattern
     (e.g. (ab,c) producing "abc" where ("x","abc") has lower rank);
     the chain never revisits passed merges, so neither does this —
     only ranks strictly greater than the last applied are candidates.
     Property-tested byte-identical to the chain, including that
-    collision shape. Catalog queries keep the SQL engine (oracle-
-    replayable); this is the scale path `apply_bpe_wordlevel(engine=
-    "python")` selects."""
+    collision shape."""
     _assert_no_straddle(merges)
     pairs = [(a, b) for a, b, *_ in merges]
     from pyspark.sql.functions import pandas_udf
@@ -425,11 +409,11 @@ def tokenize_words_py(
             ranks.setdefault(p, []).append(i)
 
         def one(w):
-            # NULL word -> NULL toks, matching the SQL twin exactly
-            # (encode_doc propagates null through regexp_replace), so
-            # the two engines agree even when called directly on a
-            # word table containing nulls (ADVICE r8) — inside
-            # apply_bpe_wordlevel the vocab is null-free either way
+            # NULL word -> NULL toks, matching the replace chain
+            # exactly (encode_doc propagates null through
+            # regexp_replace), so the two agree even on a word table
+            # containing nulls — inside apply_bpe_wordlevel the vocab
+            # is null-free either way
             if not isinstance(w, str):
                 return None
             # empty word tokenizes to the empty sequence, exactly
@@ -470,38 +454,25 @@ def apply_bpe_wordlevel(
     text_col: str = "text",
     out_col: str = "bpe_tokens",
     id_cols: Tuple[str, ...] = ("doc_id",),
-    broadcast_vocab: bool = True,
     word_tokens: "DataFrame | None" = None,
-    engine: str = "sql",
-    max_sql_merges: "int | None" = SQL_CHAIN_MAX_MERGES,
 ) -> DataFrame:
-    """Tokenize via the word-level path: distinct words -> replace
-    chain (vocab-sized) -> broadcast equi-join onto the posexploded
-    corpus -> per-doc positional reassembly. Produces the identical
-    token stream as `apply_bpe_replace` (property-tested): merges
-    never straddle word boundaries (`_assert_no_straddle`), so a
-    document's whole-text chain is exactly the concatenation of its
-    words' chains. `id_cols` must uniquely key `docs` (reassembly
-    groups on them). Docs with no words (empty/all-space/null text)
-    get an empty token array.
+    """Tokenize via the word-level path: distinct words -> Arrow
+    tokenizer (`tokenize_words_py`, vocab-sized work at any table
+    size) -> broadcast equi-join onto the posexploded corpus -> per-doc
+    positional reassembly. Produces the identical token stream as
+    `apply_bpe_replace` (property-tested): merges never straddle word
+    boundaries (`_assert_no_straddle`), so a document's whole-text
+    chain is exactly the concatenation of its words' chains.
+    `id_cols` must uniquely key `docs` and be NON-NULL (reassembly
+    groups on them; a null key never equi-joins, so such a doc would
+    silently get an empty token array). Docs with no words
+    (empty/all-space/null text) get an empty token array.
 
     `word_tokens` optionally injects a pre-materialized (word, toks)
     dictionary covering every corpus word — at 100 TB the tokenized
     vocabulary is a versioned artifact built once per tokenizer
     release and reused across datasets, so the per-run corpus plan is
-    JUST explode + join + reassembly, with zero per-merge work.
-
-    `engine` picks the vocab-side tokenizer: "sql" (default) is the
-    oracle-replayable replace chain — right for tables small enough
-    for an expression tree; "python" is the Arrow pandas_udf
-    (`tokenize_words_py`) whose cost per word is O(applied merges),
-    independent of table size — the 32k-merge production path.
-    `max_sql_merges` threads through to the sql engine's
-    expression-depth contract (see `apply_bpe_replace`) so a
-    deeper-stack JVM can raise the cap from here; ignored by the
-    python engine and the word_tokens injection path. `id_cols` must
-    be NON-NULL as well as unique: a null key never equi-joins, so
-    reassembly would silently hand such a doc an empty token array."""
+    JUST explode + join + reassembly, with zero per-merge work."""
     _assert_no_straddle(merges)
     ids = list(id_cols)
     words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
@@ -514,9 +485,7 @@ def apply_bpe_wordlevel(
         # instead left-join and raise in-plan on the first miss, so a
         # stale dictionary fails the job loudly instead of corrupting
         # token sequences.
-        wt = word_tokens.select("word", "toks")
-        if broadcast_vocab:
-            wt = F.broadcast(wt)
+        wt = F.broadcast(word_tokens.select("word", "toks"))
         joined = exploded.join(wt, "word", "left").withColumn(
             "toks",
             F.when(
@@ -532,17 +501,7 @@ def apply_bpe_wordlevel(
         )
     else:
         vocab = exploded.select("word").distinct()
-        if engine == "sql":
-            wt = tokenize_distinct_words(
-                vocab, merges, max_sql_merges=max_sql_merges
-            )
-        elif engine == "python":
-            wt = tokenize_words_py(vocab, merges)
-        else:
-            raise ValueError(f"unknown engine {engine!r} (want 'sql' or 'python')")
-        wt = wt.select("word", "toks")
-        if broadcast_vocab:
-            wt = F.broadcast(wt)
+        wt = F.broadcast(tokenize_words_py(vocab, merges).select("word", "toks"))
         joined = exploded.join(wt, "word")
     # array_sort on (pos, toks) structs orders by pos (unique per doc),
     # so reassembly is deterministic under any partitioning/arrival

@@ -11,9 +11,10 @@ Design notes for 100 TB:
   vertex-dim rank table plus one keyed aggregation — O(|E|) with
   map-side partial sums. AQE broadcasts the rank side when the vertex
   dimension fits.
-- `localCheckpoint` between iterations keeps the lineage flat; an
-  unbounded iterative plan re-optimizes (and can re-execute) the
-  whole history each round.
+- The iterations unroll into one plan that grows linearly with
+  `iters`: each rank table feeds the next iteration exactly once (a
+  linear chain — nothing re-executes), so a per-iteration
+  materialization barrier would only add driver round trips.
 - The arithmetic is ENTIRELY integer (fixed-point ranks, truncating
   integer division per edge, integer sums), so results are
   bit-reproducible across partitionings, retry orders and engines —
@@ -35,7 +36,6 @@ def pagerank_fixed_point(
     damping_den: int = 100,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Power-iteration PageRank over a DIRECTED edge list in pure
     integer arithmetic. Returns (v, rank) with rank in fixed-point
@@ -72,8 +72,6 @@ def pagerank_fixed_point(
             .agg(F.sum("c").cast("long").alias("in_sum"))
             .select("v", (F.lit(base) + F.col("in_sum")).cast("long").alias("rank"))
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint()
     return ranks
 
 

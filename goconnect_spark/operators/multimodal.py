@@ -14,8 +14,8 @@ metadata struct — the schema any 100 TB multimodal corpus uses:
 
 Decode / feature-extract / resize / frame-sample run as Arrow-batched
 Pandas UDFs over mapInPandas — the Spark-side plumbing (schema,
-batching, partition sizing) is real and tested. The codec layer
-(rounds 10-11) is REAL for the formats a stdlib can decode exactly:
+batching, partition sizing) is real and tested. The codec layer is
+REAL for the formats a stdlib can decode exactly:
 
 - PNG: COMPLETE static coverage — zlib IDAT inflate, per-scanline
   unfilter (spec §9), sub-byte sample unpacking (§7.2), palette
@@ -53,10 +53,8 @@ the dependency — but the container METADATA (duration, track count,
 video dimensions, frame count) is plain ISO BMFF structure and
 `parse_mp4_metadata` / `with_mp4_metadata` read it for real, so video
 corpora route on duration/resolution without any codec.
-`decode_stub=True` keeps the old deterministic byte-histogram
-stand-in for format-agnostic plumbing tests; with
-`decode_stub=False` the features are computed from the DECODED
-samples (pixels / PCM), not the container bytes.
+`extract_features` computes its features from the DECODED samples
+(pixels / PCM), never from the container bytes.
 
 Scale notes: mapInPandas streams Arrow batches, so peak executor
 memory is one batch of decoded media, not one partition.
@@ -1801,13 +1799,13 @@ def _sample_histogram(values, lo: int, hi: int, dim: int) -> list[float]:
 
 
 def decode_features(data: bytes, dim: int = 8) -> list[float]:
-    """Feature vector from the DECODED media samples (the real-codec
-    twin of `_fake_decode`): PNG/JPEG -> normalized pixel-value
-    histogram, WAV -> normalized amplitude histogram. The one
-    recognized-but-undecodable format (MP4) raises NotImplementedError
-    naming the missing dependency — as do the gated sub-variants of
-    the decoders themselves (arithmetic/lossless/12-bit/CMYK JPEG,
-    compressed WAV); unrecognized bytes raise ValueError."""
+    """Feature vector from the DECODED media samples: PNG/JPEG/GIF/BMP
+    -> normalized pixel-value histogram, WAV -> normalized amplitude
+    histogram. The one recognized-but-undecodable format (MP4) raises
+    NotImplementedError naming the missing dependency — as do the
+    gated sub-variants of the decoders themselves (arithmetic/
+    lossless/12-bit/CMYK JPEG, compressed WAV); unrecognized bytes
+    raise ValueError."""
     if data is None:
         raise ValueError("cannot decode NULL media")
     head = bytes(data[:12])
@@ -1852,29 +1850,15 @@ def decode_features(data: bytes, dim: int = 8) -> list[float]:
     raise ValueError("unrecognized media container")
 
 
-def _fake_decode(data: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a codec: byte-histogram features.
-    Replaceable by a real decoder with the same signature."""
-    if data is None:
-        return [0.0] * dim
-    buckets = [0] * dim
-    for b in data:
-        buckets[b % dim] += 1
-    n = max(1, len(data))
-    return [round(c / n, 6) for c in buckets]
-
-
 def extract_features(df: DataFrame, media_col: str = "media",
-                     id_col: str = "media_id", decode_stub: bool = True,
-                     dim: int = 8) -> DataFrame:
+                     id_col: str = "media_id", dim: int = 8) -> DataFrame:
     """media bytes -> feature vector via Arrow-batched mapInPandas.
 
-    decode_stub=True: deterministic byte-histogram stand-in (format-
-    agnostic plumbing tests). decode_stub=False (rounds 10-11): REAL
-    decode — PNG pixels via zlib inflate + unfilter, baseline-JPEG
-    pixels via huffman + IDCT, WAV samples via struct — and the
-    features are a normalized histogram of the decoded samples. MP4
-    rows (and gated codec sub-variants like arithmetic-coded JPEG) raise
+    Every row is decoded (`decode_features`) — PNG pixels via zlib
+    inflate + unfilter, JPEG pixels via huffman + IDCT, WAV samples via
+    struct — and the features are a normalized histogram of the
+    decoded samples. NULL media raise ValueError. MP4 rows (and gated
+    codec sub-variants like arithmetic-coded JPEG) raise
     NotImplementedError naming the missing codec (av/libjpeg); that
     surfaces as a task failure, which is the honest behavior for an
     undecodable corpus slice — filter on media_meta.format first if
@@ -1882,8 +1866,6 @@ def extract_features(df: DataFrame, media_col: str = "media",
     import hashlib
 
     def decode_cell(b):
-        if decode_stub:
-            return _fake_decode(bytes(b or b""), dim)
         return decode_features(None if b is None else bytes(b), dim)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821

@@ -41,249 +41,6 @@ from goconnect_spark.queries import (
 
 ALL_MODULES = (parity, tpch, relational, events_series, streaming_queries, graph_queries, curation, dedup, dedup2, filtering, layout, media, mixing, sampling, similarity, similarity2, pq, sketches, text, text2, packing, quality)
 
-# Driver-verification priority: the per-round correctness harness runs
-# the catalog in registration order and may cap the run (~50 of the
-# catalog). Rebuilt for round 15 (VERDICT r14 item 6 — keep rotating so
-# the cumulative driver-verified set grows): CORRECTNESS_r14 verified
-# exactly the first 50 names of the r14 ordering (the 7 r14-tier-0 +
-# the 29-query r10 cohort + the first 14 of the r11 cohort through
-# daily_new_users_cumulative); those drop to the back as "last green:
-# r14". The new order is:
-#   tier 0 = queries whose PLAN changed at r15 HEAD (the bucketed
-#     partition-local dedup candidate joins, the mapInArrow ANN
-#     scorer, the bloom conditional-marker guard, the de-risked
-#     broadcast queries whose static plans can now AQE-convert);
-#   then the r11-cohort remainder (36 names, never driver-verified
-#     since r11), then the r12/r13 cohorts, then last-green-r14.
-# Slots 1-50 = 10 tier-0 + 36 r11-remainder + the first 4 of r12, so
-# the driver's next ~50-query sample has ~zero overlap with r14's.
-# Original r14 rationale below, kept for history:
-#   tier 0 = changed or NEW at HEAD this round:
-#     - avro_encode_roundtrip (NEW — the Avro ENCODER certificate,
-#       VERDICT r13 item 3: GenericRecord -> wire bytes pinned exactly
-#       against a spec-rebuilt DuckDB hex oracle, then decoded back
-#       through the certified reader);
-#     - streaming_heavy_hitters (NEW — VERDICT r13 item 2: the sharded
-#       SpaceSaving sketch driven into its provably-exact regime by a
-#       planted 40-value skewed stream over 4 real micro-batches);
-#     - streaming_budget_admit (NEW — VERDICT r13 item 2: the greedy
-#       per-key weight budget gated on its order-invariant closed
-#       forms, with emitted rows and the state counter cross-checked);
-#     - avro_decode_fold (recertifies: functions/avro_py.py changed
-#       this round — the ADVICE r13 zero-byte-item block-count fix and
-#       the new encoder surface live in the same module).
-#     - quantile_summary_merge (NEW — mergeable weighted stride-
-#       sample quantile summary, the distributed-percentile sketch;
-#       deterministic member of the GK/KLL family so the oracle
-#       re-implements both levels and gates real data, with exact
-#       rank-window percentiles riding along as the error witness).
-#     - pii_redaction_stats (NEW — PII scrub certificate: planted
-#       emails/phones/IPv4/Luhn-gated card numbers detected and
-#       redacted by functions/pii.py, gated against an INDEPENDENT
-#       RE2 + list-comprehension detector in DuckDB with an md5
-#       witness over the redacted text).
-#   Then the full 29-query r10 cohort (nothing older remains), then
-#   the r11 cohort alphabetically: slots 1-50 = 7 tier-0 + 29 r10 +
-#   the first 14 of r11 (..daily_new_users_cumulative); the remaining
-#   36 r11 entries queue first for round 15, ahead of the r12/r13
-#   cohorts that follow. Max certificate age stays <= 3 rounds
-#   (after r14: nothing older than r11).
-_DRIVER_PRIORITY = (
-    # --- tier 0: plan changed at HEAD in round 15 ---
-    "containment_dedup",
-    "dedup_ngram_jaccard",
-    "streaming_ann_lookup",
-    "bloom_prune_join",
-    "q16_parts_supplier_counts",
-    "benchmark_contamination",
-    "q2_min_cost_supplier",
-    "q20_potential_promotion",
-    "q11_important_stock",
-    "embedding_near_dup",
-    # last green: r11 (the 36-name remainder of the r11 cohort —
-    # queued first for the driver cap since round 14, never yet
-    # driver-verified after r11; alphabetical)
-    "doc_chunking",
-    "doc_lexical_gini",
-    "duplicated_ngram_coverage",
-    "embedding_outliers",
-    "fingerprint_collision_dedup",
-    "limit_events",
-    "map_filter",
-    "ordered_merge",
-    "orders_profile",
-    "orders_rollup",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q1_pricing_summary",
-    "q22_sales_opportunity",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "referential_integrity",
-    "roundrobin_replay",
-    "semantic_dedup",
-    "sequence_packing",
-    "source_mix_weights",
-    "source_overlap_jaccard",
-    "stratified_sample",
-    "text_quality_score",
-    "top_customers_per_segment",
-    "user_history_scd2",
-    "user_rolling_7d",
-    "value_histogram_quantiles",
-    "value_outliers_mad",
-    "vocab_oov_rate",
-    "xml_extract_fold",
-    # last green: r12 (alphabetical)
-    "bpe_doc_tokens",
-    "bpe_tokenize_corpus",
-    "corpus_snapshot_diff",
-    "cosine_topk",
-    "customer_rfm_segments",
-    "customer_spend_ranks",
-    "customers_order_presence",
-    "dedup_exact",
-    "dedup_incremental_new_batch",
-    "dedup_method_agreement",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "distinct_users_kmv_by_type",
-    "doc_fingerprint",
-    "dsir_importance_weights",
-    "embedding_dim_covariance",
-    "embedding_quantization_error",
-    "event_hour_contingency",
-    "event_interarrival_gaps",
-    "event_transition_matrix",
-    "events_hourly_anomalies",
-    "events_user_lifecycle",
-    "events_value_stats",
-    "gopher_quality_rules",
-    "hourly_count_autocorr",
-    "key_skew_profile",
-    "knn_label_accuracy",
-    "label_centroid_shift",
-    "lang_id_confusion",
-    "media_classify_counts",
-    "media_jpeg_dims_profile",
-    "order_fulfillment_latency",
-    "orders_grouping_sets",
-    "phrase_search_top_trigram",
-    "priority_sample",
-    "q21_late_suppliers",
-    "retention_cohorts",
-    "source_divergence_tv",
-    "source_epoch_plan",
-    "source_length_quantiles",
-    "supplier_concentration_hhi",
-    "tfidf_top_terms",
-    "token_budget_sample",
-    "user_overlap_kmv",
-    "user_sessions",
-    "weekly_active_users",
-    # last green: r13 (alphabetical)
-    "ann_ivf_kmeans_topk",
-    "ann_random_projection_recall",
-    "bm25_keyword_topk",
-    "bpe_vocab_deep_tokens",
-    "corpus_drop_reasons",
-    "curated_corpus_stats",
-    "customer_name_fuzzy_pairs",
-    "customer_supplier_nations",
-    "daily_reconciliation",
-    "dedup_cluster_size_histogram",
-    "dedup_connected_components",
-    "dedup_filtered_corpus",
-    "dedup_quality_keepers",
-    "doc_length_buckets",
-    "doc_lm_score",
-    "doc_repetition_ratio",
-    "epoch_shard_assignment",
-    "events_daily_pivot",
-    "events_distinct_hll",
-    "events_error_context",
-    "events_hourly",
-    "events_hourly_gapfill",
-    "events_in_error_windows",
-    "events_json_buckets",
-    "gzip_roundtrip",
-    "hll_sliding_calibration",
-    "lm_score_deciles",
-    "media_animation_metadata",
-    "media_mp4_sample_ranges",
-    "minhash_jaccard_calibration",
-    "order_value_pareto",
-    "price_size_regression",
-    "q12_shipmode_priority",
-    "source_dedup_matrix",
-    "streaming_dedup_keys",
-    "streaming_enrich_cohort",
-    "streaming_error_context_join",
-    "streaming_fold_count",
-    "streaming_session_counts",
-    "streaming_windowed_hourly",
-    "text_lang_id",
-    "train_val_test_split",
-    "word_communities_lpa",
-    "word_cooccurrence",
-    "word_freq_cms",
-    "word_graph_triangles",
-    "word_pagerank",
-    "zorder_pruning_stats",
-    # last green: r14 (the 50 names CORRECTNESS_r14 verified;
-    # alphabetical)
-    "ann_index_comparison",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_adc_rerank",
-    "ann_retrieval_quality",
-    "ann_sq8_rerank",
-    "avro_decode_fold",
-    "avro_encode_roundtrip",
-    "bigram_cond_prob",
-    "boilerplate_top_shingles",
-    "brand_basket_lift",
-    "chunk_dedup_stats",
-    "corpus_novelty_curve",
-    "daily_new_users_cumulative",
-    "events_latest_per_user",
-    "events_rollup_cascade",
-    "flatmap_word_counts",
-    "fold_global",
-    "funnel_view_click_purchase",
-    "hourly_seasonal_residuals",
-    "ivm_join_view_delta",
-    "ivm_merge_hourly_counts",
-    "kv_roundtrip",
-    "lineitem_cube",
-    "orders_unpivot",
-    "pii_redaction_stats",
-    "purchases_asof_signup",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_discounted_revenue",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q7_trade_volume",
-    "quantile_summary_merge",
-    "quantity_percentiles",
-    "salted_segment_activity",
-    "source_budget_waterfill",
-    "source_containment_matrix",
-    "source_length_emd",
-    "source_quality_harmonized",
-    "streaming_budget_admit",
-    "streaming_handoff_counts",
-    "streaming_heavy_hitters",
-    "streaming_ivm_hourly_counts",
-    "streaming_quantile_summary",
-    "text_token_stats",
-)
-
 
 def all_queries():
     out = {}
@@ -292,19 +49,7 @@ def all_queries():
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(m.QUERIES)
-    # the priority list IS the certification mechanism (the driver
-    # certifies ~50/round in this order), and it is rebuilt by hand
-    # each round — a typo here would silently demote a query past the
-    # driver cap, so fail loudly instead
-    ghosts = set(_DRIVER_PRIORITY) - out.keys()
-    if ghosts:
-        raise ValueError(f"_DRIVER_PRIORITY names not in the registry: {ghosts}")
-    ordered = {}
-    for name in _DRIVER_PRIORITY:
-        if name in out:
-            ordered[name] = out.pop(name)
-    ordered.update(out)
-    return ordered
+    return out
 
 
 def all_oracles():

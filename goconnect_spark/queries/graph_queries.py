@@ -196,10 +196,9 @@ def word_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each iteration is one equi-join of the edge list against
     the vertex-dim rank table (AQE broadcasts the rank side when it
     fits) plus one keyed aggregation — O(|E|) per iteration with
-    map-side partial sums, no all-pairs anywhere. localCheckpoint
-    between iterations keeps lineage flat (the CC pattern); the
-    symmetric thresholded graph has no dangling vertices, so the
-    rank mass needs no dangling redistribution term.
+    map-side partial sums, no all-pairs anywhere. The symmetric
+    thresholded graph has no dangling vertices, so the rank mass
+    needs no dangling redistribution term.
     """
     from goconnect_spark.queries.corpus import cooccurrence_edges
 
@@ -212,16 +211,7 @@ def word_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = und.select(
         F.col("w1").alias("src"), F.col("w2").alias("dst")
     ).unionAll(und.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
-    # checkpoint=False (r14): at 3 iterations over the vocab-bounded
-    # thresholded graph the rank table feeds each next iteration ONCE
-    # (a linear chain — nothing re-executes), so the three eager
-    # per-iteration materialization barriers only cost driver round
-    # trips; one unrolled plan measured 1.83 -> 1.60 s with
-    # bit-identical output. The operator keeps checkpoint=True as its
-    # default — deep or reused iteration still wants flat lineage.
-    ranks = pagerank_fixed_point(
-        edges, iters=_PR_ITERS, scale=_PR_SCALE, checkpoint=False
-    )
+    ranks = pagerank_fixed_point(edges, iters=_PR_ITERS, scale=_PR_SCALE)
     return (
         ranks.orderBy(F.desc("rank"), "v")
         .limit(_PR_TOPK)

@@ -637,26 +637,26 @@ ORACLE = {
 # operators/bpe.py: boundary-marker encoding makes greedy
 # left-to-right merging exactly `replace()`), which the DuckDB oracle
 # replays character for character.
-# Scale (round 8, VERDICT r7 item 2): the SPARK side no longer runs
-# the replace chain over documents — that plan is O(n_merges) full-
-# document passes, fine at 24 merges but a scale-killer at a
-# production 32k-merge vocab. BPE is deterministic per word, so token
-# counts decompose: corpus reduces ONCE to (word, freq) — the same
-# merge-count-INDEPENDENT pass training uses — then only the DISTINCT
-# words run the replace chain (vocab-sized work), and token counts are
-# freq-weighted sums. Corpus-side cost is identical at 24 or 32k
-# merges. The DuckDB oracle still replays the WHOLE-DOCUMENT chain —
+# Scale: the SPARK side does not run the replace chain over documents
+# — that plan is O(n_merges) full-document passes, fine at 24 merges
+# but a scale-killer at a production 32k-merge vocab. BPE is
+# deterministic per word, so token counts decompose: corpus reduces
+# ONCE to (word, freq) — the same merge-count-INDEPENDENT pass
+# training uses — then only the DISTINCT words run the replace chain
+# (vocab-sized work), and token counts are freq-weighted sums.
+# Corpus-side cost is identical at 24 or 32k merges. The DuckDB
+# oracle still replays the WHOLE-DOCUMENT chain —
 # a structurally different derivation that agrees only if the
 # word-boundary invariant (merges never straddle words) truly holds,
 # making the cross-engine check strictly stronger than a mirror.
 # --------------------------------------------------------------------
 def bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goconnect_spark.operators.bpe import tokenize_distinct_words, word_freq_table
+    from goconnect_spark.operators.bpe import apply_bpe_replace, word_freq_table
     from goconnect_spark.queries._bpe_frozen import BPE_MERGES
 
     docs = load(spark, "documents", sf_dir)
     wf = word_freq_table(docs)  # the only corpus-sized pass
-    wt = tokenize_distinct_words(wf, BPE_MERGES)
+    wt = apply_bpe_replace(wf, BPE_MERGES, text_col="word", out_col="toks")
     # explode_OUTER is load-bearing for the scale claim: plain explode
     # lets InferFiltersFromGenerate synthesize `size(toks) > 0`, and
     # because toks is a pure function of the grouping key, Catalyst
@@ -698,45 +698,34 @@ LIMIT 100
 
 
 # --------------------------------------------------------------------
-# Per-document BPE tokenization through the full word-level serving
-# path (operators/bpe.apply_bpe_wordlevel — VERDICT r7 item 2):
-# posexplode corpus words, broadcast-join the once-tokenized distinct-
-# word map, reassemble each document's token sequence positionally.
-# The md5 over the ORDERED token stream is the load-bearing column —
-# it certifies that broadcast-join reassembly reproduces the exact
-# in-order tokenization, not just the same token multiset. Corpus-side
-# plan (explode + join + groupBy) is independent of merge count; only
-# the vocab-sized distinct-word chain grows with the table. The oracle
-# replays the whole-document replace chain per doc (the small-vocab
-# path), so the two engines derive the sequence DIFFERENTLY and must
+# Per-document BPE tokenization through the word-level serving path
+# (operators/bpe.apply_bpe_wordlevel): posexplode corpus words,
+# tokenize the distinct words with the Arrow rank-schedule tokenizer
+# (`tokenize_words_py`, the 32k-merge production path), broadcast-join
+# the word map back and reassemble each document's token sequence
+# positionally. The md5 over the ORDERED token stream is the
+# load-bearing column — it certifies that broadcast-join reassembly
+# reproduces the exact in-order tokenization, not just the same token
+# multiset. Corpus-side plan (explode + join + groupBy) is independent
+# of merge count. The oracle replays the whole-document replace chain
+# per doc, so the two engines derive the sequence DIFFERENTLY and must
 # land on the same md5.
-# Round 9 (VERDICT r8 item 2): the entry now certifies BOTH vocab-side
-# tokenizer engines through the same serving path — `tokens_md5` from
-# the oracle-replayable SQL replace chain, `tokens_md5_py` from the
-# Arrow pandas_udf rank-schedule tokenizer (`tokenize_words_py`, the
-# 32k-merge production path, previously property-pinned only). The
-# oracle emits its whole-document-chain md5 under BOTH column names,
-# so a divergence in EITHER engine (or between them) fails the hash
-# gate. Running both engines in one entry is a certification
-# diagnostic: a production job picks one engine and pays one pass.
 # --------------------------------------------------------------------
 def bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goconnect_spark.operators.bpe import apply_bpe_wordlevel
     from goconnect_spark.queries._bpe_frozen import BPE_MERGES
 
     docs = load(spark, "documents", sf_dir)
-    toked = apply_bpe_wordlevel(docs, BPE_MERGES)
-    sql_side = toked.select(
-        "doc_id",
-        F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"),
-        F.size(F.array_distinct("bpe_tokens")).cast("long").alias("n_token_types"),
-        F.md5(F.concat_ws("\x1f", "bpe_tokens")).alias("tokens_md5"),
+    return (
+        apply_bpe_wordlevel(docs, BPE_MERGES)
+        .select(
+            "doc_id",
+            F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"),
+            F.size(F.array_distinct("bpe_tokens")).cast("long").alias("n_token_types"),
+            F.md5(F.concat_ws("\x1f", "bpe_tokens")).alias("tokens_md5"),
+        )
+        .orderBy("doc_id")
     )
-    py_side = apply_bpe_wordlevel(docs, BPE_MERGES, engine="python").select(
-        "doc_id",
-        F.md5(F.concat_ws("\x1f", "bpe_tokens")).alias("tokens_md5_py"),
-    )
-    return sql_side.join(py_side, "doc_id").orderBy("doc_id")
 
 
 def _bpe_doc_tokens_sql() -> str:
@@ -761,12 +750,7 @@ SELECT doc_id,
        -- returns NULL for an empty list; Spark's concat_ws returns ''.
        -- Empty/null-text docs therefore need the COALESCE so both
        -- engines report md5('')
-       md5(COALESCE(array_to_string(toks, chr(31)), '')) AS tokens_md5,
-       -- the SAME chain-derived md5 under the python-engine column
-       -- name: the Spark side computes tokens_md5_py via the Arrow
-       -- rank-schedule tokenizer, so this one oracle value gates BOTH
-       -- engines' ordered token streams
-       md5(COALESCE(array_to_string(toks, chr(31)), '')) AS tokens_md5_py
+       md5(COALESCE(array_to_string(toks, chr(31)), '')) AS tokens_md5
 FROM tl ORDER BY doc_id
 """
 

@@ -143,15 +143,14 @@ def test_apply_bpe_replace_sql_matches_spark(spark):
     assert got == duck
 
 
-@pytest.mark.parametrize("seed,broadcast", [(5, True), (17, False)])
-def test_apply_bpe_wordlevel_equals_replace_chain(spark, seed, broadcast):
-    # the merge-count-scalable path (distinct words tokenized once,
-    # word->tokens joined back, positional reassembly) must produce
-    # the IDENTICAL per-doc token stream as the whole-document replace
-    # chain — on random stem corpora plus every edge shape the replace
-    # chain is tested on (multi-space runs, empty docs, non-BMP,
-    # newline-bearing words), with both the broadcast and the
-    # shuffle-join vocab paths
+@pytest.mark.parametrize("seed", [5, 11, 17])
+def test_apply_bpe_wordlevel_equals_replace_chain(spark, seed):
+    # the merge-count-scalable path (distinct words tokenized once by
+    # the Arrow tokenizer, word->tokens joined back, positional
+    # reassembly) must produce the IDENTICAL per-doc token stream as
+    # the whole-document replace chain — on random stem corpora plus
+    # every edge shape the replace chain is tested on (multi-space
+    # runs, empty docs, non-BMP, newline-bearing words)
     rows = _corpus(seed) + [
         (100, "😀😀a 😀a 𝄞x𝄞x"),
         (101, "  low   low  "),
@@ -165,9 +164,7 @@ def test_apply_bpe_wordlevel_equals_replace_chain(spark, seed, broadcast):
     }
     word = {
         r.doc_id: r.bpe_tokens
-        for r in apply_bpe_wordlevel(
-            docs, merges, broadcast_vocab=broadcast
-        ).collect()
+        for r in apply_bpe_wordlevel(docs, merges).collect()
     }
     # whole-doc chain yields [] for empty text; word-level must agree
     assert word == repl
@@ -178,7 +175,6 @@ def test_apply_bpe_wordlevel_injected_dictionary(spark):
     # the word_tokens injection (pre-materialized word->tokens
     # dictionary, the 100 TB versioned-artifact path) must produce
     # the same result as building the dictionary in-plan
-    from goconnect_spark.operators.bpe import tokenize_distinct_words
     import pyspark.sql.functions as F
 
     docs = spark.createDataFrame(_corpus(9), "doc_id: long, text: string")
@@ -186,7 +182,9 @@ def test_apply_bpe_wordlevel_injected_dictionary(spark):
     vocab = docs.select(
         F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("word")
     ).distinct()
-    wt = tokenize_distinct_words(vocab, merges).localCheckpoint()
+    wt = apply_bpe_replace(
+        vocab, merges, text_col="word", out_col="toks"
+    ).localCheckpoint()
     inline = {
         r.doc_id: r.bpe_tokens for r in apply_bpe_wordlevel(docs, merges).collect()
     }
@@ -205,10 +203,7 @@ def test_tokenize_words_py_equals_sql_chain(spark, seed):
     # table and the 240-merge bench fixture
     import pyspark.sql.functions as F
 
-    from goconnect_spark.operators.bpe import (
-        tokenize_distinct_words,
-        tokenize_words_py,
-    )
+    from goconnect_spark.operators.bpe import tokenize_words_py
 
     docs = spark.createDataFrame(
         _corpus(seed) + [(100, "😀😀a 😀a 𝄞x𝄞x low lower 𠀋𠀋𠀋")],
@@ -218,7 +213,12 @@ def test_tokenize_words_py_equals_sql_chain(spark, seed):
     vocab = docs.select(
         F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("word")
     ).distinct()
-    sql_t = {r.word: r.toks for r in tokenize_distinct_words(vocab, merges).collect()}
+    sql_t = {
+        r.word: r.toks
+        for r in apply_bpe_replace(
+            vocab, merges, text_col="word", out_col="toks"
+        ).collect()
+    }
     py_t = {r.word: r.toks for r in tokenize_words_py(vocab, merges).collect()}
     assert py_t == sql_t
     # the 240-merge fixture exercises long rank schedules
@@ -229,7 +229,9 @@ def test_tokenize_words_py_equals_sql_chain(spark, seed):
 
     sql_t = {
         r.word: r.toks
-        for r in tokenize_distinct_words(vocab, BPE_MERGES_240).collect()
+        for r in apply_bpe_replace(
+            vocab, BPE_MERGES_240, text_col="word", out_col="toks"
+        ).collect()
     }
     py_t = {r.word: r.toks for r in tokenize_words_py(vocab, BPE_MERGES_240).collect()}
     assert py_t == sql_t
@@ -300,43 +302,26 @@ def test_tokenize_words_py_rank_monotone_on_symbol_collision(spark):
 
 
 def test_tokenize_engines_agree_on_null_and_empty_words(spark):
-    # ADVICE r8: when called DIRECTLY on a word table containing nulls
-    # (outside apply_bpe_wordlevel, whose vocab is null-free), the two
-    # engines must agree: NULL word -> NULL toks (the SQL chain
+    # when called DIRECTLY on a word table containing nulls (outside
+    # apply_bpe_wordlevel, whose vocab is null-free), the two
+    # tokenizers must agree: NULL word -> NULL toks (the SQL chain
     # propagates null through regexp_replace), '' -> empty sequence
-    from goconnect_spark.operators.bpe import (
-        tokenize_distinct_words,
-        tokenize_words_py,
-    )
+    from goconnect_spark.operators.bpe import tokenize_words_py
 
     vocab = spark.createDataFrame(
         [("low",), (None,), ("",)], "word: string"
     )
     merges = [("l", "o"), ("lo", "w")]
     sql_t = {
-        r.word: r.toks for r in tokenize_distinct_words(vocab, merges).collect()
+        r.word: r.toks
+        for r in apply_bpe_replace(
+            vocab, merges, text_col="word", out_col="toks"
+        ).collect()
     }
     py_t = {r.word: r.toks for r in tokenize_words_py(vocab, merges).collect()}
     assert py_t == sql_t
     assert sql_t[None] is None
     assert sql_t[""] == []
-
-
-def test_apply_bpe_wordlevel_python_engine(spark):
-    from goconnect_spark.operators.bpe import apply_bpe_replace
-
-    docs = spark.createDataFrame(
-        _corpus(11) + [(102, "")], "doc_id: long, text: string"
-    )
-    merges = bpe_merges(docs, n_merges=10)
-    repl = {
-        r.doc_id: r.bpe_tokens for r in apply_bpe_replace(docs, merges).collect()
-    }
-    py = {
-        r.doc_id: r.bpe_tokens
-        for r in apply_bpe_wordlevel(docs, merges, engine="python").collect()
-    }
-    assert py == repl
 
 
 def test_apply_bpe_wordlevel_stale_dictionary_fails_loudly(spark):
@@ -346,25 +331,26 @@ def test_apply_bpe_wordlevel_stale_dictionary_fails_loudly(spark):
     # staleness)
     import pyspark.sql.functions as F
 
-    from goconnect_spark.operators.bpe import tokenize_distinct_words
-
     docs = spark.createDataFrame(
         [(0, "low low"), (1, "low newword")], "doc_id: long, text: string"
     )
     merges = [("l", "o"), ("lo", "w")]
-    stale = tokenize_distinct_words(
-        spark.createDataFrame([("low",)], "word: string"), merges
+    stale = apply_bpe_replace(
+        spark.createDataFrame([("low",)], "word: string"), merges,
+        text_col="word", out_col="toks",
     ).localCheckpoint()
     with pytest.raises(Exception, match="missing from the injected"):
         apply_bpe_wordlevel(docs, merges, word_tokens=stale).collect()
     # a COMPLETE dictionary still works through the same code path
-    full = tokenize_distinct_words(
+    full = apply_bpe_replace(
         docs.select(
             F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias(
                 "word"
             )
         ).distinct(),
         merges,
+        text_col="word",
+        out_col="toks",
     ).localCheckpoint()
     out = {
         r.doc_id: r.bpe_tokens
@@ -375,45 +361,17 @@ def test_apply_bpe_wordlevel_stale_dictionary_fails_loudly(spark):
 
 def test_sql_chain_soft_cap_refuses_large_tables(spark):
     # past ~300-350 nested replaces the JVM overflows its stack while
-    # CONVERTING the Column tree (measured on this runtime); the
-    # max_sql_merges contract turns that opaque crash into a pointed
-    # error naming the Arrow engine, and stays overridable for
-    # deeper-stack JVMs
-    from goconnect_spark.operators.bpe import (
-        SQL_CHAIN_MAX_MERGES,
-        apply_bpe_replace,
-        apply_bpe_wordlevel,
-        tokenize_distinct_words,
-    )
+    # CONVERTING the Column tree (measured on this runtime); the cap
+    # turns that opaque crash into a pointed error naming the serving
+    # path, which tokenizes the same table fine
+    from goconnect_spark.operators.bpe import SQL_CHAIN_MAX_MERGES
 
     big = [("a", "b")] * (SQL_CHAIN_MAX_MERGES + 1)
     docs = spark.createDataFrame([(0, "ab")], "doc_id: long, text: string")
-    vocab = spark.createDataFrame([("ab",)], "word: string")
-    with pytest.raises(ValueError, match="max_sql_merges"):
+    with pytest.raises(ValueError, match="apply_bpe_wordlevel"):
         apply_bpe_replace(docs, big)
-    with pytest.raises(ValueError, match="engine='python'"):
-        tokenize_distinct_words(vocab, big)
-    # the sql engine inside the serving path hits the same contract...
-    with pytest.raises(ValueError, match="max_sql_merges"):
-        apply_bpe_wordlevel(docs, big, engine="sql").collect()
-    # ...and the python engine handles the same table fine
-    out = apply_bpe_wordlevel(docs, big, engine="python").collect()
+    out = apply_bpe_wordlevel(docs, big).collect()
     assert out[0].bpe_tokens == ["ab", "</w>"]
-    # explicit override still builds a (small) chain
-    assert apply_bpe_replace(docs, big[:2], max_sql_merges=None).count() == 1
-    # the cap THREADS THROUGH the serving path (review r9): a
-    # tightened cap reaches the sql tokenizer, a loosened one unblocks
-    # it — the documented override is reachable where the error
-    # message suggests it
-    with pytest.raises(ValueError, match="max_sql_merges"):
-        apply_bpe_wordlevel(docs, big[:2], engine="sql", max_sql_merges=1)
-    ok = apply_bpe_wordlevel(
-        docs, big[:2], engine="sql", max_sql_merges=10
-    ).collect()
-    assert ok[0].bpe_tokens == ["ab", "</w>"]
-    # unknown engine fails loudly instead of a KeyError
-    with pytest.raises(ValueError, match="unknown engine"):
-        apply_bpe_wordlevel(docs, big[:2], engine="rust")
 
 
 def test_assert_no_straddle_raises_value_error():

@@ -1,23 +1,40 @@
-"""Catalog bookkeeping invariants — the hand-maintained structures the
-driver's certification gate depends on must stay mutually consistent.
+"""Catalog bookkeeping invariants — the structures the driver's
+certification gate depends on must stay mutually consistent.
 No Spark session needed; pure registry checks."""
 
 
-def test_priority_list_is_exactly_the_registry():
-    # _DRIVER_PRIORITY is rebuilt by hand each round and IS the
-    # certification mechanism (the driver certifies ~50/round in this
-    # order). A name missing from it silently demotes that query to
-    # the unordered tail past the driver cap; a ghost name wastes a
-    # slot. Both directions must hold exactly.
-    from goconnect_spark.queries import _DRIVER_PRIORITY, ALL_MODULES
+def test_driver_order_is_oldest_certificate_first():
+    # the driver verifies a capped prefix of __spark_entry__.queries()
+    # each round; the order is computed from the committed
+    # CORRECTNESS_r*.json ledgers, so it must hold exactly the
+    # registry's names, put the oldest cohort first (r12 at this
+    # ledger) and the most recently verified one (r15) last
+    import json
+    from pathlib import Path
+
+    import __spark_entry__
+    from goconnect_spark.queries import ALL_MODULES
 
     registry = set()
     for m in ALL_MODULES:
         registry |= m.QUERIES.keys()
-    prio = list(_DRIVER_PRIORITY)
-    assert len(prio) == len(set(prio)), "duplicate names in _DRIVER_PRIORITY"
-    assert set(prio) - registry == set(), "ghost names in _DRIVER_PRIORITY"
-    assert registry - set(prio) == set(), "queries missing a priority slot"
+    order = list(__spark_entry__.queries())
+    assert len(order) == len(registry) and set(order) == registry
+
+    def passing(rnd):
+        path = Path(__spark_entry__.__file__).parent / f"CORRECTNESS_r{rnd}.json"
+        return {
+            n for n, e in json.loads(path.read_text()).items()
+            if e["rows_match"] and e["schema_match"] and e["hash_match"]
+            and e["err"] is None
+        }
+
+    later = passing(13) | passing(14) | passing(15)
+    r12 = (passing(12) & registry) - later
+    assert len(r12) == 39
+    assert set(order[:39]) == r12
+    r15 = passing(15) & registry
+    assert set(order[-len(r15):]) == r15
 
 
 def test_every_query_has_an_oracle():

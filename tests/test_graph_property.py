@@ -32,10 +32,7 @@ def test_pagerank_matches_sequential_reference(spark, seed, n_v, n_e, iters):
     rng = random.Random(seed)
     edges = _random_edges(rng, n_v, n_e)
     df = spark.createDataFrame(edges, "src: long, dst: long")
-    got = {
-        r.v: r.rank
-        for r in pagerank_fixed_point(df, iters=iters, checkpoint=False).collect()
-    }
+    got = {r.v: r.rank for r in pagerank_fixed_point(df, iters=iters).collect()}
     want = pagerank_fixed_point_py(edges, iters=iters)
     assert got == want
 
@@ -47,7 +44,7 @@ def test_pagerank_symmetric_graph_conserves_vertices(spark):
     und = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2)]
     edges = und + [(b, a) for a, b in und]
     df = spark.createDataFrame(edges, "src: long, dst: long")
-    ranks = {r.v: r.rank for r in pagerank_fixed_point(df, iters=3, checkpoint=False).collect()}
+    ranks = {r.v: r.rank for r in pagerank_fixed_point(df, iters=3).collect()}
     assert set(ranks) == {0, 1, 2, 3}
     total = sum(ranks.values())
     scale = 1_000_000

@@ -32,14 +32,32 @@ def test_meta_schema(media_df):
     assert media_df.schema["media_meta"].dataType.simpleString() == MEDIA_META_SCHEMA
 
 
-def test_extract_features_deterministic(spark, media_df):
-    out1 = {r.media_id: (r.content_hash, r.features) for r in extract_features(media_df).collect()}
-    out2 = {r.media_id: (r.content_hash, r.features) for r in extract_features(media_df).collect()}
+def test_extract_features_deterministic(spark):
+    # real containers, so every row runs the decode path: ten RGB PNGs
+    # and ten mono 16-bit WAVs of varying size
+    from goconnect_spark.operators.multimodal import (
+        decode_features,
+        encode_png,
+        encode_wav,
+    )
+
+    rows = []
+    for i in range(10):
+        w, h = 4 + i, 3 + i % 4
+        px = bytes((i * 37 + k * 11) % 256 for k in range(w * h * 3))
+        rows.append((2 * i, encode_png(px, w, h, 3)))
+        pcm = [((i * 131 + k * 977) % 65536) - 32768 for k in range(64 + 16 * i)]
+        rows.append((2 * i + 1, encode_wav(pcm, 8000, 1)))
+    df = attach_meta(spark.createDataFrame(rows, "media_id long, media binary"))
+    out1 = {r.media_id: (r.content_hash, r.features) for r in extract_features(df).collect()}
+    out2 = {r.media_id: (r.content_hash, r.features) for r in extract_features(df).collect()}
     assert out1 == out2
     assert len(out1) == 20
-    # features are normalized byte histograms
-    for _, feats in out1.values():
+    # features are normalized histograms of the decoded samples
+    for mid, blob in rows:
+        feats = out1[mid][1]
         assert len(feats) == 8 and abs(sum(feats) - 1.0) < 1e-3
+        assert [round(v, 6) for v in feats] == decode_features(blob)
 
 
 # ---------------------------------------------------------------------
@@ -219,9 +237,9 @@ def test_codec_gaps_are_honest():
 
 
 def test_extract_features_real_decode(spark):
-    """decode_stub=False end-to-end: the features are histograms of
-    the DECODED samples, verified against the known arrays the
-    containers were generated from. mapInPandas plumbing unchanged."""
+    """End-to-end: the features are histograms of the DECODED
+    samples, verified against the known arrays the containers were
+    generated from."""
     from goconnect_spark.operators.multimodal import _sample_histogram, extract_features
 
     px = _pixels(6 * 4 * 3, seed=42)
@@ -231,8 +249,7 @@ def test_extract_features_real_decode(spark):
         (2, _wav_pcm(16000, 1, pcm)),
     ]
     df = attach_meta(spark.createDataFrame(rows, "media_id long, media binary"))
-    out = {r.media_id: r.features for r in
-           extract_features(df, decode_stub=False).collect()}
+    out = {r.media_id: r.features for r in extract_features(df).collect()}
     want_png = _sample_histogram(px, 0, 255, 8)
     want_wav = _sample_histogram(pcm, -32768, 32767, 8)
     assert [round(v, 6) for v in out[1]] == want_png
@@ -258,8 +275,7 @@ def test_extract_features_real_decode_jpeg(spark):
     blob = _encode_jpeg([img], 16, 8, [(1, 1)])
     df = attach_meta(spark.createDataFrame(
         [(1, blob)], "media_id long, media binary"))
-    out = {r.media_id: r.features for r in
-           extract_features(df, decode_stub=False).collect()}
+    out = {r.media_id: r.features for r in extract_features(df).collect()}
     want = _sample_histogram(decode_jpeg(blob)[4], 0, 255, 8)
     assert [round(v, 6) for v in out[1]] == want
 
@@ -267,7 +283,7 @@ def test_extract_features_real_decode_jpeg(spark):
     df2 = attach_meta(spark.createDataFrame(
         [(2, arith)], "media_id long, media binary"))
     with pytest.raises(Exception, match="libjpeg"):
-        extract_features(df2, decode_stub=False).collect()
+        extract_features(df2).collect()
 
 
 def test_sample_frames_fan_out(media_df):
@@ -400,8 +416,7 @@ def test_mixed_corpus_header_route_then_real_decode(spark):
     df = parse_media_headers(
         spark.createDataFrame(rows, "media_id long, media binary"))
     decodable = df.where(F.col("media_meta.format").isin("png", "wav"))
-    out = {r.media_id: r for r in
-           extract_features(decodable, decode_stub=False).collect()}
+    out = {r.media_id: r for r in extract_features(decodable).collect()}
     assert set(out) == {1, 2}
     assert abs(sum(out[1].features) - 1.0) < 1e-3
     assert abs(sum(out[2].features) - 1.0) < 1e-3
@@ -907,8 +922,7 @@ def test_with_jpeg_profile_routes_decodable_vs_gated(spark):
     decodable = df.where(
         F.col("media_meta.format").isin("png", "wav")
         | F.col("jpeg_profile").isin(*JPEG_DECODABLE_PROFILES))
-    feats = {r.media_id for r in
-             extract_features(decodable, decode_stub=False).collect()}
+    feats = {r.media_id for r in extract_features(decodable).collect()}
     # arithmetic-coded + junk never reach Python decode
     assert feats == {1, 2, 3, 4}
 
@@ -1511,8 +1525,7 @@ def test_gif_routes_and_decodes_end_to_end(spark):
         [(1, blob)], "media_id long, media binary"))
     meta = df.collect()[0].media_meta
     assert (meta.kind, meta.format, meta.width, meta.height) == ("image", "gif", 8, 6)
-    feats = [r.features for r in
-             extract_features(df, decode_stub=False).collect()][0]
+    feats = [r.features for r in extract_features(df).collect()][0]
     want = _sample_histogram(decode_gif(blob)[4], 0, 255, 8)
     assert [round(v, 6) for v in feats] == want
     # resize: gif decodes, resamples, re-encodes as PNG
@@ -1626,7 +1639,7 @@ def test_bmp_routes_and_decodes_end_to_end(spark):
     assert (out[2].width, out[2].height) == (6, 4)  # negative height -> magnitude
     assert out[3].format == "unknown"  # weak 'BM' alone is not enough
     feats = {r.media_id: r.features for r in extract_features(
-        df.where(F.col("media_meta.format") == "bmp"), decode_stub=False).collect()}
+        df.where(F.col("media_meta.format") == "bmp")).collect()}
     want = _sample_histogram(decode_bmp(blob)[4], 0, 255, 8)
     assert [round(v, 6) for v in feats[1]] == want
     assert decode_png(resize_image_bytes(blob, 3, 2))[:4] == (3, 2, 3, 8)

@@ -260,12 +260,11 @@ def test_catalog_wide_plan_hygiene(spark, sf_dir, qs):
         # codec-style slow-path exception, not a row-at-a-time UDF
         "fingerprint_collision_dedup": {"EvalPython"},
         # the SECOND deliberate Arrow pandas_udf: bpe_doc_tokens runs
-        # the vocab-side tokenizer with BOTH engines — the SQL replace
-        # chain AND tokenize_words_py (the rank-schedule Arrow path
-        # real 32k-merge deployments use) — so the production engine
-        # carries an oracle certificate, not just a property pin
-        # (VERDICT r8 item 2). The udf touches only the DISTINCT-word
-        # vocab, never corpus-sized rows
+        # the serving path, whose vocab-side tokenizer is
+        # tokenize_words_py (the rank-schedule Arrow path real
+        # 32k-merge deployments use), so the serving engine carries an
+        # oracle certificate, not just a property pin. The udf touches
+        # only the DISTINCT-word vocab, never corpus-sized rows
         "bpe_doc_tokens": {"EvalPython"},
         # deep-table certification (r10): the 240/2400-merge tables
         # CANNOT be a SQL chain (JVM boundary at ~300 nested

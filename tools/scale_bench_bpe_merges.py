@@ -1,58 +1,54 @@
-"""BPE merge-count scaling measurement (VERDICT r7 item 2).
+"""BPE merge-count scaling measurement.
 
-The r7 verdict's one scale gap: the replace-chain application is
-O(n_merges) full-document string passes — fine at the frozen 24
-merges, a scale-killer at a production 32k-merge vocab. The word-level
-path (distinct words tokenized once, tokens joined back / counts
-freq-weighted) makes the CORPUS-side plan independent of merge count.
-This bench measures exactly that axis: the same corpus tokenized with
-the 24-merge catalog table vs a 240-merge table (tools/
-queries/_bpe_frozen240.py, trained by the same distributed trainer on sf0.1),
+The replace-chain application is O(n_merges) full-document string
+passes — fine at the frozen 24 merges, a scale-killer at a production
+32k-merge vocab. The word-level path (distinct words tokenized once,
+tokens joined back / counts freq-weighted) makes the CORPUS-side plan
+independent of merge count. This bench measures exactly that axis: the
+same corpus tokenized with the 24-merge catalog table, a 240-merge
+table (queries/_bpe_frozen240.py, trained by the same distributed
+trainer on sf0.1) and optionally a 2,400-merge table
+(queries/_bpe_frozen2400.py, built by tools/build_bpe_merges_2400.py),
 under three plans:
 
 End-to-end plans:
-- replace_chain: the r7 catalog plan — whole-document replace chain
+- replace_chain: whole-document replace chain (`apply_bpe_replace`)
   over every doc, then token counts. Expected: wall grows roughly
   linearly with merge count (10x merges -> several-x wall).
-- wordlevel_count: the r8 catalog plan (bpe_tokenize_corpus) — corpus
-  reduces once to (word, freq); only DISTINCT words run the chain;
-  counts are freq-weighted sums.
-- wordlevel_docs: the r8 serving path (bpe_doc_tokens /
-  apply_bpe_wordlevel) — posexplode + broadcast join + positional
-  reassembly producing per-doc token arrays.
+- wordlevel_count: the bpe_tokenize_corpus plan — corpus reduces once
+  to (word, freq); only DISTINCT words run the chain; counts are
+  freq-weighted sums.
+- wordlevel_docs: the serving path (bpe_doc_tokens /
+  apply_bpe_wordlevel) — the Arrow tokenizer on the distinct words,
+  then posexplode + broadcast join + positional reassembly producing
+  per-doc token arrays.
 
 Staged measurements, separating the two cost terms the end-to-end
 numbers mix (this synthetic corpus is vocab-heavy — replica prefixes
 make every word unique per replica, so the vocab-side chain is a FAR
 larger corpus fraction than any Zipf-distributed real corpus):
-- vocab_chain: tokenize the distinct-word table alone, materialized.
-  Grows with merge count BY DESIGN — it is the vocab-sized term, and
-  at 100 TB it is a once-per-tokenizer-release artifact build
-  (word_tokens injection on apply_bpe_wordlevel), not per-run work.
+- vocab_chain / vocab_chain_py: tokenize the distinct-word table
+  alone, with the replace chain / the Arrow tokenizer
+  `tokenize_words_py`. Grows with merge count BY DESIGN — it is the
+  vocab-sized term, and at 100 TB it is a once-per-tokenizer-release
+  artifact build (word_tokens injection on apply_bpe_wordlevel), not
+  per-run work.
 - corpus_count_given_vocab / corpus_docs_given_vocab: the CORPUS-side
   plans with the word->tokens dictionary pre-materialized. These are
   the merge-count-flat claims: identical join/reassembly work at 24
   and 240 merges.
 
+The replace chain refuses tables above SQL_CHAIN_MAX_MERGES (300): a
+deeper chain overflows the JVM stack at plan construction, so every
+replace-chain plan at 2,400 merges emits an `error` record, and the
+Arrow plans are measured alongside. Failures are caught per plan and
+emitted as JSON, never crashes; replace_chain is skipped above 240
+merges (O(n_merges) full-document passes — minutes of wall to
+re-prove the point the 240 row already makes).
+
 The docs dimension (multiplier m: m replicas of the sf0.1 documents,
 each word prefixed per replica) is measured alongside so the table
-shows BOTH axes.
-Record results in SCALING.md.
-
-Round 9 adds the THIRD merge-count point: a 2,400-merge fixture
-(queries/_bpe_frozen2400.py, built by tools/build_bpe_merges_2400.py
-on the 100x synthesis) — one decade closer to a production 32k
-vocabulary. At this size the SQL chain (2,400 nested replace()
-Column nodes) OVERFLOWS THE JVM STACK at plan-construction time
-(java.lang.StackOverflowError in the Column-node-to-expression
-converter), so every SQL-chain plan at 2,400 is expected to emit an
-`error` record — that measured boundary IS the result motivating the
-Arrow engine (`tokenize_words_py` / `apply_bpe_wordlevel(
-engine="python")`), which is measured alongside and stays flat.
-Failures are caught per plan and emitted as JSON, never crashes;
-replace_chain is skipped above 240 merges (O(n_merges) full-document
-passes — minutes of wall to re-prove the point the 240 row already
-makes).
+shows BOTH axes. Record results in SCALING.md.
 
 Run: python tools/scale_bench_bpe_merges.py [multipliers...]
          [--tables 24,240,2400]
@@ -103,9 +99,11 @@ def token_counts_replace_chain(docs, merges):
 
 
 def token_counts_wordlevel(docs, merges):
-    from goconnect_spark.operators.bpe import tokenize_distinct_words, word_freq_table
+    from goconnect_spark.operators.bpe import apply_bpe_replace, word_freq_table
 
-    wt = tokenize_distinct_words(word_freq_table(docs), merges)
+    wt = apply_bpe_replace(
+        word_freq_table(docs), merges, text_col="word", out_col="toks"
+    )
     # explode_outer: see bpe_tokenize_corpus — plain explode's inferred
     # size(toks)>0 filter pushes the whole chain below the aggregate
     return (
@@ -128,23 +126,10 @@ def doc_tokens_wordlevel(docs, merges):
     ).where(F.col("n_bpe_tokens") >= 0)
 
 
-def doc_tokens_wordlevel_py(docs, merges):
-    """The production serving path at large tables:
-    apply_bpe_wordlevel(engine="python") — Arrow tokenizer on the
-    distinct vocab, same explode/join/reassembly corpus side."""
-    from goconnect_spark.operators.bpe import apply_bpe_wordlevel
-
-    toked = apply_bpe_wordlevel(docs, merges, engine="python")
-    return toked.select(
-        "doc_id", F.size("bpe_tokens").cast("long").alias("n_bpe_tokens")
-    ).where(F.col("n_bpe_tokens") >= 0)
-
-
 PLANS = {
     "replace_chain": token_counts_replace_chain,
     "wordlevel_count": token_counts_wordlevel,
     "wordlevel_docs": doc_tokens_wordlevel,
-    "wordlevel_docs_py": doc_tokens_wordlevel_py,
 }
 
 
@@ -159,8 +144,8 @@ def main():
         del args[i:i + 2]
     mults = [int(a) for a in args] or [1, 10]
     from goconnect_spark.operators.bpe import (
+        apply_bpe_replace,
         apply_bpe_wordlevel,
-        tokenize_distinct_words,
         tokenize_words_py,
         word_freq_table,
     )
@@ -212,8 +197,8 @@ def main():
             if "StackOverflowError" in msg:
                 cause = "java.lang.StackOverflowError (plan construction)"
             elif isinstance(e, ValueError):
-                # the operator's max_sql_merges contract refusing the
-                # chain — the guarded form of the same boundary
+                # SQL_CHAIN_MAX_MERGES refusing the chain — the
+                # guarded form of the same boundary
                 cause = f"ValueError: {msg[:100]}"
             emit(plan, n_merges, m, n_docs, None, t0, error=cause)
             return None
@@ -249,15 +234,16 @@ def main():
                 wt_holder = {}
 
                 def _build_sql_dict():
-                    wt = tokenize_distinct_words(vocab, merges).localCheckpoint()
+                    wt = apply_bpe_replace(
+                        vocab, merges, text_col="word", out_col="toks"
+                    ).localCheckpoint()
                     wt_holder["wt"] = wt
                     return wt.count()
 
                 timed("vocab_chain", n_merges, m, n_docs, _build_sql_dict)
-                # the Arrow python tokenizer (apply_bpe_wordlevel
-                # engine="python"): per-word cost O(applied merges),
-                # independent of TABLE size — the 32k-merge path
-
+                # the Arrow tokenizer apply_bpe_wordlevel serves with:
+                # per-word cost O(applied merges), independent of
+                # TABLE size — the 32k-merge path
                 py_ok = timed(
                     "vocab_chain_py", n_merges, m, n_docs,
                     lambda: tokenize_words_py(vocab, merges)
@@ -265,9 +251,9 @@ def main():
                     .count(),
                 )
                 if "wt" not in wt_holder and py_ok is not None:
-                    # the SQL chain could not build a dictionary at
+                    # the replace chain could not build a dictionary at
                     # this table size; the corpus-side stages below
-                    # are engine-agnostic, so feed them the Arrow one —
+                    # take either dictionary, so feed them the Arrow one —
                     # built OUTSIDE the timed region, so every
                     # vocab_chain_py cell times tokenize+count only and
                     # the merge-count axis stays cross-size comparable

@@ -11,10 +11,10 @@ increasing corpus sizes:
 - jpegdim    — with_jpeg_dimensions + with_jpeg_profile (bounded-prefix
                Arrow SOF scan: dimensions AND coding profile)
 - route+decode — filter to png/wav/huffman-jpeg then
-                 extract_features(decode_stub=False) (real stdlib
-                 codecs — incl. the round-11 JPEG decoder —
-                 in Arrow-batched mapInPandas); arithmetic-coded
-                 jpegs are routed away, never crash the stage
+                 extract_features (real stdlib codecs, incl. the
+                 JPEG decoder, in Arrow-batched mapInPandas);
+                 arithmetic-coded jpegs are routed away, never crash
+                 the stage
 - repartition_by_files — sizing from file metadata (no payload scan)
 - resize      — image rows: decode -> exact-integer bilinear 32x32 ->
                 encode_png (round-11 write path)
@@ -214,7 +214,7 @@ def main() -> None:
                 | F.col("jpeg_profile").isin(*JPEG_DECODABLE_PROFILES))
             sized = media_repartition_by_files(
                 decodable, target_bytes=8 * 1024 * 1024)
-            n_feat = extract_features(sized, decode_stub=False).count()
+            n_feat = extract_features(sized).count()
             t_decode = time.time() - t0
 
             t0 = time.time()
