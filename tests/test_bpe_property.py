@@ -195,6 +195,48 @@ def test_apply_bpe_wordlevel_injected_dictionary(spark):
     assert inline == injected
 
 
+def _final_plan_shape(df) -> list:
+    """`df`'s executed (final adaptive) physical plan, top-down, one
+    entry per operator: its name and its expressions, with expression,
+    lambda-variable and codegen-stage ids stripped. Expressions are
+    read off the operator objects because the plan's text form shows
+    an aggregate's computed column only by name."""
+    import re
+
+    df.collect()
+    ids = r"#\d+L?|(?<=x_)\d+| \(\d+\)"
+    shape = []
+
+    def walk(node):
+        exprs = node.expressions()
+        parts = [exprs.apply(i).toString() for i in range(exprs.size())]
+        shape.append(re.sub(ids, "", " ".join([node.nodeName()] + parts)))
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            walk(node.plan())  # a stage is a leaf wrapping its subplan
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan().executedPlan())
+    return shape
+
+
+def test_apply_bpe_wordlevel_plan_is_merge_count_flat(spark):
+    # the word-level plan's corpus side (posexplode, vocab distinct,
+    # broadcast join, positional reassembly) must not grow with the
+    # merge table: the merges only run inside the Arrow tokenizer, on
+    # distinct words. A 10x deeper table gives the same operators with
+    # the same expressions (a per-merge replace() chain would not).
+    from goconnect_spark.queries._bpe_frozen import BPE_MERGES
+    from goconnect_spark.queries._bpe_frozen240 import BPE_MERGES_240
+
+    docs = spark.createDataFrame(_corpus(5), "doc_id: long, text: string")
+    plan24 = _final_plan_shape(apply_bpe_wordlevel(docs, BPE_MERGES))
+    plan240 = _final_plan_shape(apply_bpe_wordlevel(docs, BPE_MERGES_240))
+    assert any(op.startswith("ArrowEvalPython") for op in plan24), plan24
+    assert plan24 == plan240
+
+
 @pytest.mark.parametrize("seed", [5, 17])
 def test_tokenize_words_py_equals_sql_chain(spark, seed):
     # the Arrow python tokenizer (the 32k-merge scale path) must be
@@ -238,7 +280,7 @@ def test_tokenize_words_py_equals_sql_chain(spark, seed):
 
 
 def test_tokenize_words_py_at_2400_merges_matches_sequential_chain(spark):
-    # at the 2,400-merge bench fixture the SQL twin cannot even be
+    # at the 2,400-merge catalog table the SQL twin cannot even be
     # BUILT (2,400 nested replace() Column nodes overflow the JVM
     # stack at plan construction — the measured boundary that
     # motivates the Arrow engine), so the engine-equivalence pin at
@@ -265,7 +307,7 @@ def test_tokenize_words_py_at_2400_merges_matches_sequential_chain(spark):
             syms = out
         return syms
 
-    # words the fixture's 100x-prefix training vocabulary covers
+    # words the table's 100x-prefix training vocabulary covers
     # (deep merge cascades), partially-covered stems, unseen words,
     # non-BMP, and a word colliding with merged-symbol spellings
     words = (

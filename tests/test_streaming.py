@@ -8,7 +8,9 @@ import pytest
 from goconnect_spark.sources.core import ParquetSource
 from goconnect_spark.streaming.run import (
     run_bounded,
+    scoped_shuffle_partitions,
     session_counts,
+    stream_stream_join,
     streaming_dedup,
     streaming_fold,
     windowed_counts,
@@ -302,21 +304,19 @@ def test_streaming_limit_multi_batch_is_first_n_by_arrival(spark, tmp_path):
     """Across micro-batches StreamingLimit is first-n-by-ARRIVAL
     (seq-ordered within each batch), per its documented contract: an
     earlier batch's rows are never evicted by later, smaller seqs."""
-    import os
-    import time
+    import pyarrow as pa
 
     from goconnect_spark.streaming.run import StreamingLimit
 
     d = str(tmp_path / "in")
     # file A (older mtime -> first batch) carries the LARGER seqs
-    spark.range(100, 110).selectExpr("id as seq").coalesce(1).write.parquet(d + "/a")
-    time.sleep(1.1)  # FileStreamSource orders files by mtime
-    spark.range(0, 10).selectExpr("id as seq").coalesce(1).write.parquet(d + "/b")
+    _write_batches(d, [pa.table({"seq": pa.array(range(100, 110), pa.int64())}),
+                       pa.table({"seq": pa.array(range(0, 10), pa.int64())})])
 
     stream = (
         spark.readStream.schema("seq long")
         .option("maxFilesPerTrigger", 1)
-        .parquet(d + "/*")
+        .parquet(d)
         .select(F.col("seq"), F.current_timestamp().alias("event_time"))
     )
     lim = StreamingLimit(n=15)
@@ -498,103 +498,100 @@ def _sum_state_metric(q, key):
     )
 
 
-def test_streaming_dedup_state_is_evicted_by_watermark(spark, tmp_path):
-    """The 100 TB claim behind dropDuplicatesWithinWatermark is that
-    dedup state is BOUNDED by the watermark horizon, not the corpus.
-    Drive three micro-batches whose event times advance 10 days per
-    batch under a 1-hour watermark and assert, via the state-store
-    metrics Spark reports per batch, that earlier batches' key state
-    is physically REMOVED (numRowsRemoved > 0) and the final live
-    state is far smaller than the total distinct-key count."""
-    import datetime as dt
+def _write_batches(d, tables):
+    """One parquet file per pyarrow table under `d`, mtimes stamped in
+    list order: FileStreamSource orders files by modification time, so
+    a maxFilesPerTrigger=1 drain replays the tables as batches in order
+    without sleeping between writes."""
+    import os
     import time
 
-    from goconnect_spark.streaming.run import streaming_dedup
+    import pyarrow.parquet as pq
 
-    d = str(tmp_path / "ev")
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    for b in range(3):
-        rows = [(b * 1000 + i, t0 + dt.timedelta(days=10 * b)) for i in range(50)]
-        spark.createDataFrame(rows, ["k", "event_time"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(d)
-        time.sleep(1.1)  # FileStreamSource orders batches by mtime
-
-    stream = (
-        spark.readStream.schema("k bigint, event_time timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    deduped = streaming_dedup(stream, ["k"], watermark="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("t_evict_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # all 150 keys are unique -> all pass the dedup
-    assert spark.sql("select count(*) n from t_evict_dedup").collect()[0].n == 150
-    # the run crossed batch boundaries and state rows were truly dropped
-    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(batches) >= 3
-    removed = _sum_state_metric(q, "numRowsRemoved")
-    assert removed > 0, [p["stateOperators"] for p in q.recentProgress]
-    # live state at the end is bounded by the watermark horizon (only
-    # the last batch's keys can still be inside the 1h window), NOT
-    # the 150-key corpus
-    last_total = [
-        op["numRowsTotal"]
-        for p in q.recentProgress
-        for op in (p.get("stateOperators") or [])
-        if op.get("numRowsTotal") is not None
-    ][-1]
-    assert last_total <= 50, last_total
+    os.makedirs(d)
+    t0 = time.time() - 2 * len(tables)
+    for b, t in enumerate(tables):
+        path = f"{d}/b{b:02d}.parquet"
+        pq.write_table(t, path)
+        os.utime(path, (t0 + b, t0 + b))
 
 
-def test_windowed_agg_state_is_evicted_by_watermark(spark, tmp_path):
-    """Same physical-eviction assertion for the windowed aggregation:
-    closed windows must leave the state store (append mode emits them
-    exactly when they close)."""
+def _stateful_drain(helper, stream):
+    if helper == "streaming_dedup":
+        return streaming_dedup(stream, ["k"], watermark="1 hour")
+    if helper == "windowed_counts":
+        return windowed_counts(stream, window="1 hour", watermark="1 hour",
+                               keys=("k",)).select("k", "n")
+    if helper == "session_counts":
+        return session_counts(stream, gap="10 minutes", watermark="1 hour",
+                              keys=("k",)).select("k", "session_events")
+    left = stream.where("side = 0").select("k", "event_time")
+    right = stream.where("side = 1").select("k", "event_time")
+    return stream_stream_join(left, right, on="k", tolerance="10 minutes",
+                              watermark="1 hour").select("k")
+
+
+@pytest.mark.parametrize(
+    "helper",
+    ["streaming_dedup", "windowed_counts", "session_counts", "stream_stream_join"],
+)
+def test_stateful_state_is_evicted_by_watermark(spark, tmp_path, helper):
+    """Each stateful helper's state is bounded by the watermark horizon,
+    not by how much of the stream has been drained. Equal batches whose
+    event times jump 10 days per batch are drained under a 1-hour
+    watermark, once as 3 batches and once as 6: state rows must be
+    physically removed (numRowsRemoved > 0), and the live state left
+    after the last batch (numRowsTotal over its state operators) must
+    be the same at 3 and at 6 batches — flat in the drain length — while
+    the emitted rows grow."""
     import datetime as dt
-    import time
 
-    from goconnect_spark.streaming.run import windowed_counts
+    import pyarrow as pa
 
-    d = str(tmp_path / "ev2")
-    t0 = dt.datetime(2026, 3, 1, 0, 0, 0)
-    for b in range(3):
-        rows = [
-            (b * 1000 + i, t0 + dt.timedelta(days=10 * b, minutes=i))
-            for i in range(30)
-        ]
-        spark.createDataFrame(rows, ["k", "event_time"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(d)
-        time.sleep(1.1)
+    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
 
-    stream = (
-        spark.readStream.schema("k bigint, event_time timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    agg = windowed_counts(stream, window="1 hour", watermark="1 hour")
-    q = (
-        agg.select(F.col("window.start").alias("ws"), "n")
-        .writeStream.format("memory")
-        .queryName("t_evict_win")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    removed = _sum_state_metric(q, "numRowsRemoved")
-    assert removed > 0, [p["stateOperators"] for p in q.recentProgress]
-    # every batch-1/batch-2 window closed once the watermark jumped 10
-    # days past it; emitted rows cover those earlier days
-    emitted = spark.sql("select sum(n) s from t_evict_win").collect()[0].s
-    assert emitted >= 60  # the first two batches' windows all closed
+    def batch(b):
+        # 40 events over 40 minutes: 8 keys, sides alternating every
+        # 8 events so each join key has rows on both sides
+        return pa.table({
+            "k": pa.array([i % 8 for i in range(40)], pa.int64()),
+            "side": pa.array([(i // 8) % 2 for i in range(40)], pa.int32()),
+            "event_time": pa.array(
+                [t0 + dt.timedelta(days=10 * b, minutes=i) for i in range(40)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+        })
+
+    live, emitted = {}, {}
+    for n in (3, 6):
+        d = str(tmp_path / f"ev{n}")
+        _write_batches(d, [batch(b) for b in range(n)])
+        stream = (
+            spark.readStream.schema("k bigint, side int, event_time timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
+        )
+        # one state store per operator: the per-store commit is paid on
+        # every trigger and the test's few rows need no more
+        with scoped_shuffle_partitions(spark, 1):
+            q = (
+                _stateful_drain(helper, stream)
+                .writeStream.format("memory")
+                .queryName(f"t_evict_{helper}_{n}")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        progress = [p for p in q.recentProgress if p.get("stateOperators")]
+        assert sum(p["numInputRows"] > 0 for p in progress) == n
+        removed = _sum_state_metric(q, "numRowsRemoved")
+        assert removed > 0, [p["stateOperators"] for p in progress]
+        live[n] = sum(op["numRowsTotal"] for op in progress[-1]["stateOperators"])
+        emitted[n] = spark.table(f"t_evict_{helper}_{n}").count()
+    assert live[3] == live[6], live
+    # while the state stays flat, output keeps growing with the drain
+    assert 0 < emitted[3] < emitted[6], emitted
 
 
 def test_dedup_then_windowed_counts_chain_on_default_session(spark, tmp_path):
@@ -603,22 +600,24 @@ def test_dedup_then_windowed_counts_chain_on_default_session(spark, tmp_path):
     chain drains three batches 10 days apart, the watermark advances
     past the earlier windows, and append mode emits them deduplicated."""
     import datetime as dt
-    import time
+
+    import pyarrow as pa
 
     from goconnect_spark.streaming.run import streaming_dedup, windowed_counts
 
     d = str(tmp_path / "ev3")
     t0 = dt.datetime(2026, 5, 1, 0, 0, 0)
-    for b in range(3):
-        # every key arrives twice; a batch's 30 keys share one 1h window
-        rows = [
-            (b * 1000 + i, t0 + dt.timedelta(days=10 * b, minutes=i))
-            for i in range(30)
-        ] * 2
-        spark.createDataFrame(rows, ["k", "event_time"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(d)
-        time.sleep(1.1)
+    # every key arrives twice; a batch's 30 keys share one 1h window
+    _write_batches(d, [
+        pa.table({
+            "k": pa.array([b * 1000 + i for i in range(30)] * 2, pa.int64()),
+            "event_time": pa.array(
+                [t0 + dt.timedelta(days=10 * b, minutes=i) for i in range(30)] * 2,
+                pa.timestamp("us", tz="UTC"),
+            ),
+        })
+        for b in range(3)
+    ])
 
     stream = (
         spark.readStream.schema("k bigint, event_time timestamp")

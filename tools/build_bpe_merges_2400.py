@@ -1,27 +1,22 @@
-"""Offline build of the 2,400-merge BENCH FIXTURE (tools/
-_bpe_merges_2400.py) — the third point on the merge-count scaling
-axis (24 catalog / 240 / 2,400), one decade closer to a production
-32k-merge vocabulary.
+"""Offline build of the 2,400-merge BPE table
+(goconnect_spark/queries/_bpe_frozen2400.py), the deepest table the
+catalog query `bpe_vocab_deep_tokens` certifies the Arrow tokenizer
+against the DuckDB replace chain at.
 
-Corpus: the 100x replica-prefixed synthesis of sf0.1 documents
-(scale_bench_bpe_merges.synthesize with m=100 — the m=10 vocab that
-trained the 240-merge fixture exhausts its pair supply at 427 merges,
-so the third axis point needs the wider ~3,100-word vocabulary; plain
-sf0.1 merges out at 107). Training on a WIDER vocab than the bench
-corpus is the production shape on purpose: a real 32k table mostly
-does not apply to any single word, so the Arrow engine's
-O(applied-merges) per-word cost stays flat while the SQL chain pays
-for every table row — exactly the contrast the bench measures.
+Corpus: the sf0.1 documents table (read from
+goconnect_spark.tables.DEFAULT_SF_DIR) replicated 100 times, every
+word of replica k prefixed with `r<k>` (`synthesize`). Plain sf0.1 merges out
+at 107 pairs and the 10x synthesis behind the 240-merge table at 427,
+so 2,400 merges need the wider ~3,100-word vocabulary. A table
+trained on a wider vocabulary than the corpus it tokenizes is the
+production shape: most of a 32k table applies to no single word.
 
-Trainer: the SEQUENTIAL reference `bpe_merges_py` over the corpus's
-(word, freq) table. This is the identical algorithm the distributed
-trainer runs (same symbolization, same greedy merge, same total-order
-tie-break) and the two are property-pinned byte-equal on random +
-pathological + non-BMP corpora (tests/test_bpe_property.py); at 2,400
-iterations the 1-row-argmax-per-merge Spark loop is ~2,400 jobs of
-pure scheduling overhead, so the vocab-sized sequential pass is the
-honest offline tool — the corpus-sized reduction to (word, freq) is
-still the distributed step.
+Trainer: the sequential reference `bpe_merges_py` over the corpus's
+(word, freq) table. It is the same algorithm as the distributed
+trainer (same symbolization, greedy merge and total-order tie-break),
+and tests/test_bpe_property.py pins the two byte-equal. At 2,400
+iterations the distributed loop would be ~2,400 one-row argmax jobs;
+the reduction to (word, freq) stays the distributed step.
 
 Usage: python tools/build_bpe_merges_2400.py
 Rewrites goconnect_spark/queries/_bpe_frozen2400.py.
@@ -34,48 +29,57 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pyspark.sql.functions as F  # noqa: E402
+
 OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
                    "goconnect_spark", "queries", "_bpe_frozen2400.py")
 N_MERGES = 2400
+REPLICAS = 100
+
+
+def synthesize(spark, m: int):
+    """m replicas of the sf0.1 documents; replica k gets disjoint doc
+    ids and every word prefixed with `r<k>`."""
+    from goconnect_spark.tables import DEFAULT_SF_DIR
+
+    docs = spark.read.parquet(f"{DEFAULT_SF_DIR}/documents.parquet")
+    reps = spark.range(m).select(F.col("id").cast("int").alias("k"))
+    return docs.crossJoin(reps).select(
+        # widen k: int32 overflows at m >= 215
+        (F.col("doc_id") + F.col("k").cast("long") * 10_000_000).alias("doc_id"),
+        F.array_join(
+            F.expr("transform(split(text, ' '), w -> concat('r', k, w))"), " "
+        ).alias("text"),
+    )
 
 
 def main():
-    import shutil
-    import tempfile
-
     from goconnect_spark.operators.bpe import bpe_merges_py, word_freq_table
     from goconnect_spark.session import get_spark
-    from tools.scale_bench_bpe_merges import synthesize
 
     spark = get_spark("bpe-2400-build")
     spark.sparkContext.setLogLevel("ERROR")
-    work = tempfile.mkdtemp(prefix="bpe2400_")
     try:
-        synthesize(spark, 100, work)
-        docs = spark.read.parquet(f"{work}/documents.parquet")
         # the only corpus-sized pass — distributed, like production
-        wf = {r.word: r.freq for r in word_freq_table(docs).collect()}
+        wf = {r.word: r.freq
+              for r in word_freq_table(synthesize(spark, REPLICAS)).collect()}
     finally:
-        shutil.rmtree(work, ignore_errors=True)
         spark.stop()
     print(f"vocab: {len(wf)} distinct words", flush=True)
     merges = bpe_merges_py(wf, n_merges=N_MERGES, min_freq=2)
     bad = [(a, b) for a, b, _ in merges if "</w>" in a]
     assert not bad, f"boundary invariant violated: {bad}"
     rows = "\n".join(f"    ({a!r}, {b!r}, {pf})," for a, b, pf in merges)
-    body = f'''"""BENCH FIXTURE: a {len(merges)}-merge BPE table for the merge-count
-scaling measurement (tools/scale_bench_bpe_merges.py) — the third
-axis point after the 24-merge catalog table and the 240-merge
-fixture. Trained by tools/build_bpe_merges_2400.py: the sequential
-reference trainer `bpe_merges_py` (property-pinned byte-identical to
-the distributed trainer operators/bpe.bpe_merges) on the (word, freq)
-table of the 100x replica-prefixed synthesis of /root/testdata/sf0.1
-documents, n_merges={N_MERGES} requested, min_freq=2 ({len(merges)}
-yielded before pair exhaustion). Since round 10 this IS also a
-catalog artifact: `bpe_vocab_deep_tokens` certifies the Arrow
-tokenizer against the DuckDB CTE-staged replace chain at this depth
-(the 24-merge queries/_bpe_frozen.py stays the corpus-level table).
-DO NOT EDIT BY HAND; retrain via this header's recipe to change."""
+    body = f'''"""A {len(merges)}-merge BPE table: the deepest of the two tables the
+catalog query `bpe_vocab_deep_tokens` and its DuckDB oracle tokenize
+the documents vocabulary with (queries/text2.py; the 24-merge
+queries/_bpe_frozen.py stays the corpus-level table). Trained by
+tools/build_bpe_merges_2400.py: the sequential reference trainer
+`bpe_merges_py` (property-pinned byte-identical to the distributed
+trainer operators/bpe.bpe_merges) on the (word, freq) table of the
+{REPLICAS}x replica-prefixed synthesis of the sf0.1 documents,
+n_merges={N_MERGES} requested, min_freq=2 ({len(merges)} yielded).
+DO NOT EDIT BY HAND; rerun the builder to change."""
 
 BPE_MERGES_2400 = [
 {rows}

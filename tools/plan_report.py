@@ -62,7 +62,7 @@ def main() -> None:
     for name, fn in sorted(all_queries().items()):
         # streaming drains execute eagerly and have no single batch
         # plan; their state-store behavior is audited by
-        # tests/test_streaming.py + tools/scale_bench_streaming.py
+        # tests/test_streaming.py
         if name.startswith("streaming_"):
             skipped.append(name)
             continue
